@@ -770,7 +770,7 @@ object Scale {
             bpd.filter(pmod(col("id"), lit(4L)) === sh.toLong), ts,
             (nb.toLong, perDoc.toDouble), 1.2, 0.75)))
       }
-      val bmRouter = new ShardedServe.ShardedSparseBM25Serving(bmParts)
+      val bmRouter = new ShardedServe.ShardedSparseServing(bmParts)
       qs.values.foreach { terms => // warm-up (incl. scatter pool)
         bmRouter.search(terms, 10); bmRouter.searchMaxScore(terms, 10)
       }

@@ -65,15 +65,4 @@ object SessionTuning {
   def shuffle(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.shuffle.sort.bypassMergeThreshold",
       sys.env.getOrElse("GRAFT_SHUFFLE_BYPASS_THRESHOLD", "8"))
-      // Codegen'd hash-aggregate fast-map capacity: env knob only, Spark
-      // default (2^16) kept. r13 measured "avg hash probes per key" = 498
-      // on the then-current BM25 (qid, nid) scoring aggregate and flagged
-      // capacityBit=20 as a round-14 adoption candidate — but the r13
-      // idf-fold restructure changed that aggregate's input, and the r14
-      // A/B (BM25+hybrid family, per-rep task_ms from BENCH_DETAIL) shows
-      // NO task-time delta any more (167.4 k ms at 2^16 vs 169.9 k at
-      // 2^20 summed medians) and slightly worse wall. Not adopted; the
-      // knob stays for future A/Bs.
-      .config("spark.sql.codegen.aggregate.fastHashMap.capacityBit",
-        sys.env.getOrElse("GRAFT_AGG_FASTMAP_BITS", "16"))
 }

@@ -183,38 +183,18 @@ object ShardedServe {
       perShardRanked.flatten
         .sortBy { case (id, d) => (if (ascending) d else -d, id) })
 
-  /** Scatter-gather router over sparse IP posting shards (documents
+  /** Scatter-gather router over sparse posting shards (documents
     * partitioned across shards — each shard is a complete inverted index
-    * over its own docs): per-shard WAND/MaxScore arms are EXACT, so the
-    * merge under (score desc, id asc) equals the single-index answer over
-    * the union bit-for-bit. The bitset passes through unchanged and is
+    * over its own docs), IP and BM25 alike: per-shard WAND/MaxScore arms
+    * are EXACT, so the merge under (score desc, id asc) equals the
+    * single-index answer over the union bit-for-bit. BM25 shards must be
+    * loaded from shard-sliced postings under the COLLECTION'S global
+    * stats (df/idf, N, avgdl), the way a host keeps collection-level stats
+    * above its segments; then per-shard scores equal the global scores
+    * restricted to shard docs. The bitset passes through unchanged and is
     * invoked concurrently across shards (see [[scatter]]): it must be
     * thread-safe and side-effect-free. */
   final class ShardedSparseServing(shards: Seq[Serve.LocalSparseSearcher]) {
-    require(shards.nonEmpty, "router needs at least one shard")
-    def search(query: Seq[(String, Long)], k: Int): Seq[(Long, Double)] =
-      mergeTopK(scatter(shards)(_.search(query, k)), k, ascending = false)
-    def search(
-        query: Seq[(String, Long)], k: Int,
-        allowed: Long => Boolean): Seq[(Long, Double)] =
-      mergeTopK(scatter(shards)(_.search(query, k, allowed)), k, ascending = false)
-    def searchMaxScore(query: Seq[(String, Long)], k: Int): Seq[(Long, Double)] =
-      mergeTopK(scatter(shards)(_.searchMaxScore(query, k)), k, ascending = false)
-    def searchMaxScore(
-        query: Seq[(String, Long)], k: Int,
-        allowed: Long => Boolean): Seq[(Long, Double)] =
-      mergeTopK(scatter(shards)(_.searchMaxScore(query, k, allowed)), k, ascending = false)
-  }
-
-  /** BM25 router — per-shard searchers must be loaded from shard-sliced
-    * postings under the COLLECTION'S global stats (df/idf, N, avgdl), the
-    * way a host keeps collection-level stats above its segments; then
-    * per-shard scores equal the global scores restricted to shard docs
-    * and the merge is exact. The bitset passes through unchanged (ids are
-    * global), on the WAND and MaxScore arms alike, and is invoked
-    * concurrently across shards (see [[scatter]]): it must be
-    * thread-safe and side-effect-free. */
-  final class ShardedSparseBM25Serving(shards: Seq[Serve.LocalSparseBM25Searcher]) {
     require(shards.nonEmpty, "router needs at least one shard")
     def search(query: Seq[(String, Long)], k: Int): Seq[(Long, Double)] =
       mergeTopK(scatter(shards)(_.search(query, k)), k, ascending = false)

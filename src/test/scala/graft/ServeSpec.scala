@@ -1048,7 +1048,7 @@ class ServeSpec extends SparkSpec {
     queriesLocal.foreach { case (q, terms) =>
       val got = searcher.searchMaxScore(terms, 10)
       assert(got == batch(q), s"maxscore query $q: $got != ${batch(q)}")
-      anyAbandon ||= searcher.lastSkipped > 0
+      anyAbandon ||= searcher.lastAbandoned > 0
       assert(searcher.lastScored < nDocs,
         s"maxscore fully scored ${searcher.lastScored} of $nDocs — no pruning")
     }
@@ -1221,7 +1221,7 @@ class ServeSpec extends SparkSpec {
     // sharded BM25: shard-sliced postings under the COLLECTION's global
     // stats (df/idf, N, avgdl) — per-shard scores are the global scores
     // restricted to shard docs, so the merge is exact
-    val router = new graft.operators.ShardedServe.ShardedSparseBM25Serving(
+    val router = new graft.operators.ShardedServe.ShardedSparseServing(
       (0 until 3).map { sh =>
         Serve.loadSparseBM25(new SparseIndexModel(
           bp.filter(col("id") % 3 === sh), termStats, (nDocs, avgdl), 1.2, 0.75))
@@ -1309,7 +1309,7 @@ class ServeSpec extends SparkSpec {
     val batchF = batchTop(Some(col("id") % 2 === 1))
     val searcher = Serve.loadSparseBM25(model)
     // sharded: shard-sliced postings under the COLLECTION's global stats
-    val router = new graft.operators.ShardedServe.ShardedSparseBM25Serving(
+    val router = new graft.operators.ShardedServe.ShardedSparseServing(
       (0 until 3).map { sh =>
         Serve.loadSparseBM25(new SparseIndexModel(
           bp.filter(col("id") % 3 === sh), termStats, (nDocs.toLong, avgdl), 1.2, 0.75))
