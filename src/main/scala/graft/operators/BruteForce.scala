@@ -335,9 +335,10 @@ object BruteForce {
     * `sparkContext.broadcast` (one torrent copy per executor, spillable —
     * never a closure capture re-serialized into every task, and never the
     * whole query table resident at once when nq ≈ nb): the query side is
-    * hash-split into ceil(nq·rowBytes / chunkBytes) chunks, each chunk is
-    * collected, broadcast, and fused against one pass over the base scan;
-    * per-chunk candidate sets union into the final bounded-heap merge.
+    * hash-split into min(nq, ceil(nq·rowBytes / chunkBytes)) chunks, each
+    * chunk is collected, broadcast, and fused against one pass over the
+    * base scan; per-chunk candidate sets union into the final bounded-heap
+    * merge.
     * Each qid lives in exactly one chunk, so the union is disjoint by
     * query and the merge is exact. The base never shuffles and each
     * partition emits ≤ nq×k candidate rows. Supports the dense float
@@ -364,7 +365,9 @@ object BruteForce {
           col("id").cast("double").as("dist"), col("id").cast("int").as("rnk"))
     val dim = qSide.select(size(col("qvec"))).head().getInt(0)
     val rowBytes = 4L * dim + 32L
-    val numChunks = math.max(1L, (nq0 * rowBytes + chunkBytes - 1) / chunkBytes).toInt
+    // at most one chunk per query: past that, chunks only add empty
+    // collect jobs, broadcasts and union branches
+    val numChunks = math.min(nq0, math.max(1L, (nq0 * rowBytes + chunkBytes - 1) / chunkBytes)).toInt
     val rDigits = roundDist.getOrElse(-1)
     val asc = metric.ascending
     val m = metric // avoid closing over the DataFrame-bound Column factory

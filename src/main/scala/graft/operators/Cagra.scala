@@ -197,17 +197,11 @@ final class CagraIndex(
 ) extends graft.VectorIndex {
 
   /** Per-query serving adapter over the optimized CAGRA graph — the
-    * adapt_for_cpu serving contract run sequentially per query. */
-  /** Coarse entry selection ON by default (round-10 randomized sweep:
-    * recall parity at fewer seed evaluations — see
-    * [[HnswIndex.serving]]); `coarseEntries = false` forces the flat
-    * all-entries seeding scan. */
-  def serving(
-      maxNodes: Int = 2000000,
-      coarseEntries: Boolean = true): Serve.LocalGraphSearcher = {
-    val s = Serve.load(graph, base, entries, metric, maxNodes)
-    if (coarseEntries) s.enableCoarseEntries() else s
-  }
+    * adapt_for_cpu serving contract run sequentially per query, with
+    * coarse entry selection on (round-10 randomized sweep: recall parity
+    * at fewer seed evaluations — see [[HnswIndex.serving]]). */
+  def serving(): Serve.LocalGraphSearcher =
+    Serve.load(graph, base, entries, metric).enableCoarseEntries()
 
   override def indexType: String = "GPU_CAGRA"
   override lazy val count: Long = base.count()

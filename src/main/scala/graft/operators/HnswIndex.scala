@@ -53,17 +53,13 @@ final class HnswIndex(
     * online path — IndexHNSWWrapper's ef-early-exit walk): graph + raw
     * tier loaded once, each search one sequential best-first walk.
     * Coarse entry selection (the upper-layer-descent analog — see
-    * [[Serve.LocalGraphSearcher.enableCoarseEntries]]) is ON by default
-    * since round 10's randomized sweep (dims 16/64/256 × entry counts,
+    * [[Serve.LocalGraphSearcher.enableCoarseEntries]]) is always on since
+    * round 10's randomized sweep (dims 16/64/256 × entry counts,
     * ServeSpec): recall parity with the flat argmin at up to 2.9× fewer
-    * seed evaluations; pass `coarseEntries = false` to force the flat
-    * all-entries scan. */
-  def serving(
-      maxNodes: Int = 2000000,
-      coarseEntries: Boolean = true): Serve.LocalGraphSearcher = {
-    val s = Serve.load(graph, base, entries, metric, maxNodes)
-    if (coarseEntries) s.enableCoarseEntries() else s
-  }
+    * seed evaluations. The flat all-entries scan stays reachable as
+    * `Serve.load(..)` without `enableCoarseEntries()`. */
+  def serving(): Serve.LocalGraphSearcher =
+    Serve.load(graph, base, entries, metric).enableCoarseEntries()
 
   /** Variant-faithful refined serving — the handle's own memory split,
     * served: quantized kinds traverse their CODED tier (SQ8 codes at
@@ -72,23 +68,21 @@ final class HnswIndex(
     * rescore the walk's window from the raw refine tier, exactly as the
     * batch `search` does relationally. Exact kind refines over raw (a
     * no-op rescoring — kept so every variant serves through one verb). */
-  def servingRefined(
-      maxNodes: Int = 2000000,
-      coarseEntries: Boolean = true): Serve.RefinedSearcher = {
+  def servingRefined(): Serve.RefinedSearcher = {
     val s = variant match {
       case HnswVariant.Sq8(stats) =>
-        Serve.loadRefinedSq8(graph, base, entries, Some(stats), metric, maxNodes)
+        Serve.loadRefinedSq8(graph, base, entries, Some(stats), metric)
       case HnswVariant.Pq(model) =>
-        Serve.loadRefinedPq(graph, base, entries, model, metric, maxNodes)
+        Serve.loadRefinedPq(graph, base, entries, model, metric)
       case HnswVariant.Prq(m1, m2) =>
         Serve.loadRefined(graph, ProductQuant.prqReconTier(base, m1, m2),
-          base, entries, metric, maxNodes)
+          base, entries, metric)
       case HnswVariant.Exact =>
         // traversal tier == raw tier: one shared map, half the bytes of
         // loading two identical tiers
-        Serve.loadRefinedShared(graph, base, entries, metric, maxNodes)
+        Serve.loadRefinedShared(graph, base, entries, metric)
     }
-    if (coarseEntries) s.enableCoarseEntries() else s
+    s.enableCoarseEntries()
   }
 
   override def indexType: String = variant.name

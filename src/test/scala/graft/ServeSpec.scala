@@ -2172,4 +2172,18 @@ class ServeSpec extends SparkSpec {
       assert(got == batch(qid), s"query $qid: serve $got != batch ${batch(qid)}")
     }
   }
+
+  test("shard loads enforce their row cap while streaming") {
+    import spark.implicits._
+    val df = (1L to 5L).map(i => (i, i * 10)).toDF("id", "v")
+    val got = scala.collection.mutable.ArrayBuffer.empty[Long]
+    Serve.streamRows(df, cap = 5)(r => got += r.getLong(0))
+    assert(got.sorted == (1L to 5L))
+    assertThrows[IllegalArgumentException](Serve.streamRows(df, cap = 4)(_ => ()))
+    // a grouped row weighs its list length: 5 rows in 2 groups count 5
+    val grouped = df.groupBy(col("id") % 2).agg(collect_list(col("v")))
+    def listLen(r: org.apache.spark.sql.Row) = r.getSeq[Long](1).size
+    Serve.streamRows(grouped, cap = 5, listLen)(_ => ())
+    assertThrows[IllegalArgumentException](Serve.streamRows(grouped, cap = 4, listLen)(_ => ()))
+  }
 }
