@@ -197,11 +197,11 @@ object Scale {
 
     // ---- DiskANN SERVING arm at corpus scale: PQ codes + graph resident
     // (the pq_code_budget_gb tier), raw vectors PAGED per query from the
-    // parquet-backed tier — the SSD fetch analog. Equality vs the batch
+    // 4 KiB page store — the SSD fetch analog. Equality vs the batch
     // beam asserted in-run; ndis / visited / raw-fetch counters are the
     // memory-vs-disk traffic observables ----
     locally {
-      val serving = time("serve load (diskann: codes+graph+entries resident, sector-store raw)")(
+      val serving = time("serve load (diskann: codes+graph+entries resident, 4 KiB page-store raw)")(
         Serve.loadDiskAnn(diskann))
       val tier = serving.rawTier.asInstanceOf[Serve.PagedRawTier]
       val q16 = queries.limit(16)
@@ -225,8 +225,8 @@ object Scale {
       println(f"diskann serve per-query latency: $perQueryMs%.2f ms " +
         f"(ADC ndis ${ndis / qv16.length}, visited ${visited / qv16.length} of $nb, " +
         f"raw fetched ${fetched / qv16.length}/query — the SSD reads: " +
-        f"${sectors / qv16.length} sectors / ${(ioBytes / qv16.length) >> 10} KiB of " +
-        f"${tier.totalSectors} sectors / ${tier.totalBytes >> 20} MiB total; " +
+        f"${sectors / qv16.length} 4 KiB pages / ${(ioBytes / qv16.length) >> 10} KiB of " +
+        f"${tier.totalSectors} pages / ${tier.totalBytes >> 20} MiB total; " +
         f"resident RAM tier ${serving.residentBytes >> 20} MiB vs " +
         f"fp32 ${(nb.toLong * (8L + 4L * dim)) >> 20} MiB; batch equality asserted)")
       // WARM-NODE CACHE (search_cache_budget_gb analog, diskann.cc:714-726):
@@ -251,7 +251,7 @@ object Scale {
       println(f"diskann serve (warm cache ${warm.warmCachedNodes} nodes, " +
         f"${warm.residentCacheBytes >> 20} MiB) per-query latency: $warmMs%.2f ms " +
         f"(cache hits ${wHits / qv16.length}/query, paged ${wFetched / qv16.length}/query " +
-        f"in ${wSectors / qv16.length} sectors — vs ${fetched / qv16.length} uncached; " +
+        f"in ${wSectors / qv16.length} 4 KiB pages — vs ${fetched / qv16.length} uncached; " +
         f"batch equality asserted)")
     }
     graph.unpersist()
@@ -583,8 +583,8 @@ object Scale {
       }
       println(f"ivf_sq8 serve per-query latency: resident-raw $sq8ResMs%.2f ms, " +
         f"paged-raw $sq8PagedMs%.2f ms (${fetched / qv.length}/query raw fetches — the SSD " +
-        f"reads: ${sectors / qv.length} sectors / ${(ioBytes / qv.length) >> 10} KiB of " +
-        f"${sq8Tier.totalSectors} sectors / ${sq8Tier.totalBytes >> 20} MiB total); " +
+        f"reads: ${sectors / qv.length} 4 KiB pages / ${(ioBytes / qv.length) >> 10} KiB of " +
+        f"${sq8Tier.totalSectors} pages / ${sq8Tier.totalBytes >> 20} MiB total); " +
         f"resident codes ${sq8Paged.residentCodeBytes >> 20} MiB vs fp32 ${fp32Bytes >> 20} MiB; " +
         "batch equality asserted on both tiers")
       // PQ: m=8 bytes/vector — 32x fewer resident bytes than fp32 at dim 64

@@ -259,7 +259,7 @@ class PropertySpec extends SparkSpec {
       }.distinctBy(_._1)
       val df = spark.createDataFrame(rows).toDF("id", "vec")
         .repartition(1 + trial) // arbitrary input layout; save re-sorts
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-sectors-prop$trial").toString
+      val dir = graft.queries.StreamStage.dir(s"graft-sectors-prop$trial").toString
       SectorStore.save(df, dir, rowsPerGroup = 32)
       val reader = SectorStore.openIfValid(spark, dir).getOrElse(
         fail(s"trial $trial: sector store failed the sorted-fence invariant"))
@@ -282,5 +282,78 @@ class PropertySpec extends SparkSpec {
         s"trial $trial: scanned the whole store")
       reader.close()
     }
+
+    // hostile inputs: rejected at save with the offending id named
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType), StructField("vec", ArrayType(FloatType))))
+    def frame(rows: Seq[Row]) = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    def stored(rows: Seq[Row]): graft.operators.Serve.PagedRawTier = {
+      val dir = graft.queries.StreamStage.dir("graft-sectors-edge").toString
+      SectorStore.save(frame(rows), dir, rowsPerGroup = 2)
+      new graft.operators.Serve.PagedRawTier(SectorStore.openIfValid(spark, dir).getOrElse(
+        fail(s"${rows.length}-row store failed to open")))
+    }
+    Seq(
+      ("mixed dimension", Seq(Row(1L, Seq(1f, 2f)), Row(2L, Seq(1f))), "id 2"),
+      ("null id", Seq(Row(1L, Seq(1f)), Row(null, Seq(2f))), "null id"),
+      ("null vector", Seq(Row(1L, Seq(1f)), Row(7L, null)), "id 7"),
+      ("duplicate id", Seq(Row(3L, Seq(1f)), Row(3L, Seq(2f))), "id 3")
+    ).foreach { case (what, rows, named) =>
+      val dir = graft.queries.StreamStage.dir("graft-sectors-bad").toString
+      val e = intercept[IllegalArgumentException](SectorStore.save(frame(rows), dir))
+      assert(e.getMessage.contains(named), s"$what: ${e.getMessage}")
+    }
+    // NaN (with a payload), ±Inf and −0.0 come back as the same raw bits
+    val odd = Seq(Float.NaN, java.lang.Float.intBitsToFloat(0x7fc01234), Float.PositiveInfinity,
+      Float.NegativeInfinity, -0.0f, 0.0f, Float.MinPositiveValue)
+    val special = (0 until 5).map(i => (i.toLong * 2L, Seq.tabulate(3)(j => odd((i + j) % odd.length))))
+    val st = stored(special.map { case (id, v) => Row(id, v) })
+    val back = st.fetch(special.map(_._1) :+ 1L)
+    special.foreach { case (id, v) =>
+      assert(back.get(id).toSeq.map(java.lang.Float.floatToRawIntBits) ==
+        v.map(java.lang.Float.floatToRawIntBits), s"id $id did not round-trip bit-exact")
+    }
+    assert(back.size == special.length && st.lastFetched == special.length.toLong)
+    // empty and one-row frames give stores that open; absent ids read nothing
+    val empty = stored(Seq.empty)
+    assert(empty.totalRows == 0L && empty.fetch(Seq(1L)).isEmpty && empty.lastSectorsRead == 0L)
+    val one = stored(Seq(Row(5L, Seq(0.5f, -1f))))
+    assert(one.fetch(Seq(5L, 5L, 6L)).get(5L).toSeq == Seq(0.5f, -1f) && one.lastRequested == 2L)
+    assert(one.fetch(Seq(6L, -1L)).isEmpty && one.lastSectorsRead == 0L)
+  }
+
+  test("sector store: concurrent fetches through one paged tier equal single-thread fetches") {
+    import graft.sources.SectorStore
+    import scala.jdk.CollectionConverters._
+    val rnd = new scala.util.Random(4242L)
+    val rows = (0 until 2000).map(i => (i.toLong * 3L + rnd.nextInt(3), Array.fill(16)(rnd.nextFloat())))
+    val dir = graft.queries.StreamStage.dir("graft-sectors-conc").toString
+    SectorStore.save(spark.createDataFrame(rows).toDF("id", "vec"), dir, rowsPerGroup = 8)
+    val tier = new graft.operators.Serve.PagedRawTier(
+      SectorStore.openIfValid(spark, dir).getOrElse(fail("store failed to open")))
+    val ids = rows.map(_._1).toArray
+    // seeded requests: scattered present ids, repeats and absent ids
+    def request(seed: Long): Seq[Long] = {
+      val r = new scala.util.Random(seed)
+      Seq.fill(1 + r.nextInt(60))(if (r.nextInt(8) == 0) -1L - r.nextInt(50) else ids(r.nextInt(ids.length)))
+    }
+    def run(t: Int): Seq[Map[Long, Seq[Float]]] = (0 until 50).map { j =>
+      tier.fetch(request(t * 1000L + j)).asScala.map { case (id, v) => id -> v.toSeq }.toMap
+    }
+    val single = (0 until 4).map(run)
+    assert(single.flatten.exists(_.nonEmpty))
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      // answers only: the tier's last* fields are last-writer-wins
+      val futs = (0 until 4).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Map[Long, Seq[Float]]]] {
+          def call(): Seq[Map[Long, Seq[Float]]] = { start.await(); run(t) }
+        })
+      }
+      start.countDown()
+      futs.zipWithIndex.foreach { case (f, t) => assert(f.get() == single(t), s"thread $t diverged") }
+    } finally pool.shutdownNow()
   }
 }

@@ -595,9 +595,9 @@ class ServeSpec extends SparkSpec {
     import graft.sources.SectorStore
     val (cents, index) = ivfFixture
     val st = Quantization.sq8Train(index.select(col("id"), col("vec")))
-    // sector store at FINE granularity so the 500-row fixture spans many
-    // row groups (production stores use the default ~1024 rows/sector)
-    val dir = java.nio.file.Files.createTempDirectory("graft-sectors").toString
+    // page store at FINE granularity so the 500-row fixture spans many
+    // pages (by default a page holds as many rows as fit in 4 KiB)
+    val dir = graft.queries.StreamStage.dir("graft-sectors").toString
     SectorStore.save(index.select(col("id"), col("vec")), dir, rowsPerGroup = 16)
     val batch = collectKnn(IvfIndex.searchSq8(
       queries, index, cents, 5, nprobe = 2, reorderK = 5, Some(4), Some(st)))
@@ -754,7 +754,7 @@ class ServeSpec extends SparkSpec {
     val model = ProductQuant.explicitModel(base, m = 8, ksub = 16, step = 25)
     val idx = DiskAnn.build(base, model, entries.select(col("nid")),
       degree = 5, searchListSize = 16, beamIters = 2, roundDist = Some(4))
-    val dir = java.nio.file.Files.createTempDirectory("graft-diskann-store").toString
+    val dir = graft.queries.StreamStage.dir("graft-diskann-store").toString
     idx.save(dir)
     val idx2 = DiskAnn.load(spark, dir)
     assert(idx2.rawDir.contains(s"$dir/raw"))
