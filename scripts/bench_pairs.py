@@ -4,7 +4,7 @@
 Usage (from the repository root):
 
     python3 scripts/bench_pairs.py --rev <base> [--pairs 10] [--seeds 1-10]
-        [--workload serve_mixed] [--trace 0] [--out pairs.json] [--keep]
+        [--workload serve_mixed] [--trace 0]
 
 Clones the repository at `--rev` into its own temporary directory (so the
 base side builds into its own `target/` and never shares incremental state
@@ -13,11 +13,14 @@ alternating which side runs first. Pair i uses seed i of `--seeds` (a list
 such as `1,2,5` or a range such as `1-10`, reused cyclically).
 
 For every workload and end-to-end metric of BENCHMARK.json it prints each
-side's median and quartiles, the number of pairs the change wins (ties
-count for neither side), and whether the claim rule holds: the change wins
-at least nine tenths of the pairs and the medians differ, in the better
-direction, by more than the base's interquartile range. `--out` writes
-every run's metrics as JSON. Nothing under `bench/` is changed.
+side's median and quartiles over the runs that produced a result, the
+number of pairs the change wins out of every pair run (a pair with a tie
+or a failed run is not a win), and whether the claim rule holds: the change wins at
+least nine tenths of the pairs run, the medians differ, in the better
+direction, by more than the base's interquartile range, every change run
+finished and was correct, and no change run failed more operations than
+its pair's base run. The base clone is deleted at exit. Nothing under
+`bench/` is changed.
 """
 import argparse
 import json
@@ -66,26 +69,36 @@ def quartiles(xs):
 
 
 def report(workload, pairs, spec):
+    """`pairs` holds every (base, change) pair run; a side is None when its run failed."""
     print(f"\n{workload}: {len(pairs)} pairs")
+    done = [(b, c) for b, c in pairs if b is not None and c is not None]
+    # a gain counts only when every change run finished, was correct and
+    # failed no more operations than the base run of its pair
+    sound = all(c is not None and c["correct"] and (b is None or c["failed"] <= b["failed"])
+                for b, c in pairs)
     print(f"{'metric':<10} {'base q1/med/q3':>30} {'change q1/med/q3':>30} {'wins':>6}  claim")
     for m in spec:
         name, lower = m["name"], m["better"] == "lower"
-        ok = [(b[name], c[name]) for b, c in pairs if name in b and name in c]
-        if not ok:
+        base = [b[name] for b, _ in pairs if b is not None and name in b]
+        change = [c[name] for _, c in pairs if c is not None and name in c]
+        if not base or not change:
             continue
-        base = [b for b, _ in ok]
-        change = [c for _, c in ok]
         bq1, bmed, bq3 = quartiles(base)
         cq1, cmed, cq3 = quartiles(change)
-        wins = sum(1 for b, c in ok if (c < b if lower else c > b))
+        wins = sum(1 for b, c in pairs if b is not None and c is not None and name in b and name in c
+                   and (c[name] < b[name] if lower else c[name] > b[name]))
         better = cmed < bmed if lower else cmed > bmed
-        holds = wins * 10 >= 9 * len(ok) and better and abs(cmed - bmed) > (bq3 - bq1)
+        holds = (sound and wins * 10 >= 9 * len(pairs) and better
+                 and abs(cmed - bmed) > (bq3 - bq1))
         print(f"{name:<10} {bq1:>9.4g} {bmed:>9.4g} {bq3:>9.4g}  {cq1:>9.4g} {cmed:>9.4g} {cq3:>9.4g}"
-              f" {wins:>3}/{len(ok):<2}  {'holds' if holds else 'no'}")
-    failed = [(b["failed"], c["failed"]) for b, c in pairs]
-    print(f"failed ops per pair (base, change): {failed}")
-    wrong = [i + 1 for i, (b, c) in enumerate(pairs) if not (b["correct"] and c["correct"])]
-    print(f"pairs with a run not correct: {wrong or 'none'}")
+              f" {wins:>3}/{len(pairs):<2}  {'holds' if holds else 'no'}")
+    side = lambda r: "run failed" if r is None else r["failed"]
+    print(f"failed ops per pair (base, change): {[(side(b), side(c)) for b, c in pairs]}")
+    wrong = [i + 1 for i, (b, c) in enumerate(pairs)
+             if not (b is not None and b["correct"] and c is not None and c["correct"])]
+    print(f"pairs with a run failed or not correct: {wrong or 'none'}")
+    if len(done) < len(pairs):
+        print(f"pairs with both runs finished: {len(done)} of {len(pairs)}")
 
 
 def main():
@@ -95,8 +108,6 @@ def main():
     ap.add_argument("--seeds", default="1-10")
     ap.add_argument("--workload", action="append", help="repeatable; default serve_mixed")
     ap.add_argument("--trace", type=int, default=0, choices=(0, 1))
-    ap.add_argument("--out", help="write every run's metrics here as JSON")
-    ap.add_argument("--keep", action="store_true", help="keep the base clone")
     args = ap.parse_args()
     workloads = args.workload or ["serve_mixed"]
     seeds = parse_seeds(args.seeds)
@@ -105,11 +116,11 @@ def main():
 
     tmp = tempfile.mkdtemp(prefix="bench-pairs-")
     base_tree = os.path.join(tmp, "base")
-    subprocess.run(["git", "clone", "-q", ROOT, base_tree], check=True)
-    subprocess.run(["git", "-C", base_tree, "checkout", "-q", args.rev], check=True)
-    runs = {w: [] for w in workloads}
     try:
+        subprocess.run(["git", "clone", "-q", ROOT, base_tree], check=True)
+        subprocess.run(["git", "-C", base_tree, "checkout", "-q", args.rev], check=True)
         for w in workloads:
+            pairs = []
             for i in range(args.pairs):
                 seed = seeds[i % len(seeds)]
                 order = [("base", base_tree), ("change", ROOT)]
@@ -122,16 +133,10 @@ def main():
                           + ("failed" if got[side] is None else
                              " ".join(f"{m['name']}={got[side].get(m['name'], float('nan')):.4g}"
                                       for m in spec)), flush=True)
-                if got["base"] is not None and got["change"] is not None:
-                    runs[w].append((got["base"], got["change"]))
-            report(w, runs[w], spec)
+                pairs.append((got["base"], got["change"]))
+            report(w, pairs, spec)
     finally:
-        if args.out:
-            with open(args.out, "w") as fh:
-                json.dump({w: [{"base": b, "change": c} for b, c in ps] for w, ps in runs.items()},
-                          fh, indent=1)
-        if not args.keep:
-            shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -537,11 +537,9 @@ object Serve {
       // (the bounded ef-set whose worst member drives both early exit and
       // neighbor admission) holds ALLOWED nodes only, so a selective
       // bitset can never pollute the answer set's capacity or terminate
-      // the walk against a disallowed worst-element. L2 neighbors fold
-      // four at a time ([[ServeKernels.l2Sum4]]) and are then admitted in
-      // adjacency order; one whose raw sum is past the full result's
-      // [[ServeKernels.l2Gate]] could never be admitted, so it skips its
-      // sqrt and round.
+      // the walk against a disallowed worst-element. An L2 neighbor whose
+      // raw sum is past the full result's [[ServeKernels.l2Gate]] could
+      // never be admitted, so it skips its sqrt and round.
       val cand = new MinQueue
       val result = new BoundedHeap(nCand)
       val unit = math.pow(10d, -roundDist.toDouble)
@@ -567,36 +565,21 @@ object Serve {
           val nbs = adj(cs)
           var j = 0
           while (j < nbs.length) {
-            // the next (up to) four unvisited neighbors, in adjacency order
-            var c = 0
-            while (c < 4 && j < nbs.length) {
-              if (sc.visit(nbs(j))) { sc.lane(c) = nbs(j); c += 1 }
-              j += 1
-            }
-            ndis += c
-            if (!l2) {
-              var t = 0
-              while (t < c) {
-                val nb = sc.lane(t)
+            val nb = nbs(j)
+            if (sc.visit(nb)) {
+              ndis += 1
+              if (!l2) {
                 val kd = key(ServeKernels.dist(metric, roundDist, q, vec(nb)))
                 if (!result.full || before(kd, nb, result.worstKey, result.worstId)) admit(kd, nb)
-                t += 1
-              }
-            } else {
-              val folded = c == 4 && l2Sum4(q, vec(sc.lane(0)), vec(sc.lane(1)), vec(sc.lane(2)),
-                vec(sc.lane(3)), gate, sc.sums)
-              if (c == 4 && !folded) c = 0 // all four past the gate
-              var t = 0
-              while (t < c) {
-                val nb = sc.lane(t)
-                val s = if (folded) sc.sums(t) else l2Sum(q, vec(nb), gate)
+              } else {
+                val s = l2Sum(q, vec(nb))
                 if (!(s > gate)) {
                   val kd = finishL2(metric, roundDist, s)
                   if (!result.full || before(kd, nb, result.worstKey, result.worstId)) admit(kd, nb)
                 }
-                t += 1
               }
             }
+            j += 1
           }
         }
       }
@@ -769,19 +752,15 @@ object Serve {
     private def dist(q: Array[Float], v: Array[Float]): Double =
       ServeKernels.dist(metric, roundDist, q, v)
 
-    // centroid positions in cluster id order — the probe's tie-break
-    private val byCid: Array[Int] = Array.range(0, centIds.length).sortBy(centIds(_))
-
-    /** List positions of the `nprobe` nearest centroids by (rounded key,
-      * cluster id), the batch probe's choice, nearest first — so the
-      * top-k heap fills early and its gate tightens; scan order never
-      * changes an answer (the top-k and the shell are order-free). */
-    private def nearest(q: Array[Float], nprobe: Int): Array[Int] = {
-      val kd = centVecs.map { c =>
-        val d = dist(q, c)
-        if (metric.ascending) d else -d
-      }
-      best(kd, byCid, nprobe)
+    /** List positions by (rounded key, cluster id), the batch probe's
+      * order, nearest first — so the top-k heap fills early and its gate
+      * tightens; scan order never changes an answer (the top-k and the
+      * shell are order-free). */
+    private def probeOrder(q: Array[Float]): Array[Int] = {
+      def key(d: Double): Double = if (metric.ascending) d else -d
+      Array.tabulate(centIds.length)(p => (key(dist(q, centVecs(p))), centIds(p), p))
+        .sorted(Ordering.Tuple3(Ordering.Double.TotalOrdering, Ordering.Long, Ordering.Int))
+        .map(_._3)
     }
 
     /** Offer a member's raw L2 sum to the sink: past the sink's gate it
@@ -829,16 +808,15 @@ object Serve {
           }
           n += c
           if (c == 4) {
-            if (l2Sum4(q, vs(l0), vs(l1), vs(l2), vs(l3), sink.gate, sums)) {
-              emit(sink, ids(l0), sums(0))
-              emit(sink, ids(l1), sums(1))
-              emit(sink, ids(l2), sums(2))
-              emit(sink, ids(l3), sums(3))
-            }
+            l2Sum4(q, vs(l0), vs(l1), vs(l2), vs(l3), sums)
+            emit(sink, ids(l0), sums(0))
+            emit(sink, ids(l1), sums(1))
+            emit(sink, ids(l2), sums(2))
+            emit(sink, ids(l3), sums(3))
           } else {
-            if (c > 0) emit(sink, ids(l0), l2Sum(q, vs(l0), sink.gate))
-            if (c > 1) emit(sink, ids(l1), l2Sum(q, vs(l1), sink.gate))
-            if (c > 2) emit(sink, ids(l2), l2Sum(q, vs(l2), sink.gate))
+            if (c > 0) emit(sink, ids(l0), l2Sum(q, vs(l0)))
+            if (c > 1) emit(sink, ids(l1), l2Sum(q, vs(l1)))
+            if (c > 2) emit(sink, ids(l2), l2Sum(q, vs(l2)))
           }
         }
         n
@@ -909,21 +887,14 @@ object Serve {
         q: Array[Float], k: Int, nprobe: Int, allowed: Long => Boolean): Seq[(Long, Double)] = {
       requireK(k)
       requireDim(q, dim)
-      val probed = nearest(q, nprobe)
+      val order = probeOrder(q)
       val sink = new TopKSink(k, metric, unit)
       var candidates = 0L
-      probed.foreach(p => candidates += scan(q, p, allowed, sink))
+      order.take(nprobe).foreach(p => candidates += scan(q, p, allowed, sink))
       // ensure_topk_full: probed lists held < k allowed → widen to the
       // remaining lists (the batch expansion adds every unprobed list)
-      if (allowed != null && !sink.heap.full) {
-        val done = new Array[Boolean](centIds.length)
-        probed.foreach(done(_) = true)
-        var p = 0
-        while (p < done.length) {
-          if (!done(p)) candidates += scan(q, p, allowed, sink)
-          p += 1
-        }
-      }
+      if (allowed != null && !sink.heap.full)
+        order.drop(nprobe).foreach(p => candidates += scan(q, p, allowed, sink))
       lastCandidates = candidates
       sink.heap.ranked(metric.ascending)
     }
@@ -1130,13 +1101,13 @@ object Serve {
       ids.flatMap(id => Option(m.get(id)).map(id -> _))
     }
 
-    private val centIds: Array[Long] = cents.map(_._1)
-    private val byCid: Array[Int] = Array.range(0, cents.length).sortBy(centIds(_))
-
     /** The `nprobe` nearest lists under the shared 4dp contract (the probe
       * ranking of `IvfIndex.probe` with roundDist=4, ties by cluster id). */
     private def probed(q: Array[Float], nprobe: Int): Array[Long] =
-      best(cents.map(c => dist(Metric.L2, roundDist, q, c._2)), byCid, nprobe).map(centIds)
+      cents.map { case (cid, c) => (dist(Metric.L2, roundDist, q, c), cid) }
+        .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+        .take(nprobe)
+        .map(_._2)
 
     /** Score the allowed members of the probed lists into `sink`: the raw
       * ADC sum, the sink's gate, then sqrt and the 4dp round for members

@@ -13,27 +13,14 @@ package graft.operators
   */
 private[operators] object ServeKernels {
 
-  /** Dimensions folded between two checks of a partial sum against a
-    * gate. */
-  val Block = 16
-
-  /** Σ (q_i − v_i)² in double, i = 0..d−1. When a block of [[Block]]
-    * dimensions leaves the partial sum above `bound`, the fold stops and
-    * returns that partial sum: squares are never negative, so the full
-    * sum would be at least as large, or NaN — and a finite gate rejects
-    * both (NaN sorts last and lies in no range shell). */
-  def l2Sum(q: Array[Float], v: Array[Float], bound: Double = Double.PositiveInfinity): Double = {
+  /** Σ (q_i − v_i)² in double, i = 0..d−1. */
+  def l2Sum(q: Array[Float], v: Array[Float]): Double = {
     var s = 0.0d
     var i = 0
-    val n = q.length
-    while (i < n) {
-      val end = math.min(i + Block, n)
-      while (i < end) {
-        val d = q(i).toDouble - v(i).toDouble
-        s += d * d
-        i += 1
-      }
-      if (s > bound) i = n + 1
+    while (i < q.length) {
+      val d = q(i).toDouble - v(i).toDouble
+      s += d * d
+      i += 1
     }
     s
   }
@@ -41,33 +28,25 @@ private[operators] object ServeKernels {
   /** [[l2Sum]] of four vectors in lockstep into `out(0..3)`: each lane
     * keeps the `i = 0..d−1` order, so every sum is bit-identical to
     * [[l2Sum]]'s, while the four independent chains overlap the add
-    * latency a single fold waits on. Returns false, leaving `out`
-    * unfinished, once a block leaves all four partial sums above
-    * `bound`. */
+    * latency a single fold waits on. */
   def l2Sum4(
       q: Array[Float], v0: Array[Float], v1: Array[Float], v2: Array[Float], v3: Array[Float],
-      bound: Double, out: Array[Double]): Boolean = {
+      out: Array[Double]): Unit = {
     var s0, s1, s2, s3 = 0.0d
-    val n = q.length
     var i = 0
-    while (i < n) {
-      val end = math.min(i + Block, n)
-      while (i < end) {
-        val x = q(i).toDouble
-        val d0 = x - v0(i).toDouble
-        val d1 = x - v1(i).toDouble
-        val d2 = x - v2(i).toDouble
-        val d3 = x - v3(i).toDouble
-        s0 += d0 * d0
-        s1 += d1 * d1
-        s2 += d2 * d2
-        s3 += d3 * d3
-        i += 1
-      }
-      if (s0 > bound && s1 > bound && s2 > bound && s3 > bound) i = n + 1
+    while (i < q.length) {
+      val x = q(i).toDouble
+      val d0 = x - v0(i).toDouble
+      val d1 = x - v1(i).toDouble
+      val d2 = x - v2(i).toDouble
+      val d3 = x - v3(i).toDouble
+      s0 += d0 * d0
+      s1 += d1 * d1
+      s2 += d2 * d2
+      s3 += d3 * d3
+      i += 1
     }
     out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
-    i == n
   }
 
   /** The metric's distance of `q` to `v` under the 4dp contract: an L2
@@ -210,21 +189,6 @@ private[operators] object ServeKernels {
     }
   }
 
-  /** Positions of the `n` best (key, id) pairs, best first: `keys` is
-    * indexed by position and `byId` lists the positions in ascending id
-    * order (equal ids in position order), so ties resolve exactly as a
-    * stable (key, id) sort — the IVF probe order. */
-  def best(keys: Array[Double], byId: Array[Int], n: Int): Array[Int] = {
-    val m = math.min(n, byId.length)
-    if (m <= 0) Array.emptyIntArray
-    else {
-      val h = new BoundedHeap(m)
-      var r = 0
-      while (r < byId.length) { h.offer(keys(byId(r)), r); r += 1 }
-      h.drain()._2.map(r => byId(r.toInt))
-    }
-  }
-
   /** Unbounded min-heap of (key, slot) pairs — the graph walk's
     * candidate queue, best first. */
   final class MinQueue {
@@ -289,9 +253,6 @@ private[operators] object ServeKernels {
     /** Entry indices evaluated in the current query, `evaluated` of them. */
     val evalOrder = new Array[Int](entries)
     var evaluated = 0
-    /** Up to four unvisited neighbors of one hop and their raw sums. */
-    val lane = new Array[Int](4)
-    val sums = new Array[Double](4)
     private var gen = 0
 
     /** Start a query: nothing is visited or evaluated. */
