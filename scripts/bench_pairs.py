@@ -12,8 +12,9 @@ with the working tree), then runs `bench/run.py` once per side per pair,
 alternating which side runs first. Pair i uses seed i of `--seeds` (a list
 such as `1,2,5` or a range such as `1-10`, reused cyclically).
 
-For every workload and end-to-end metric of BENCHMARK.json it prints each
-side's median and quartiles over the runs that produced a result, the
+For every workload and end-to-end metric of BENCHMARK.json (its per-layer
+metrics with `--trace 1`, since a traced run reports only those) it prints
+each side's median and quartiles over the runs that produced a result, the
 number of pairs the change wins out of every pair run (a pair with a tie
 or a failed run is not a win), and whether the claim rule holds: the change wins at
 least nine tenths of the pairs run, the medians differ, in the better
@@ -76,7 +77,8 @@ def report(workload, pairs, spec):
     # failed no more operations than the base run of its pair
     sound = all(c is not None and c["correct"] and (b is None or c["failed"] <= b["failed"])
                 for b, c in pairs)
-    print(f"{'metric':<10} {'base q1/med/q3':>30} {'change q1/med/q3':>30} {'wins':>6}  claim")
+    width = max(len(m["name"]) for m in spec)
+    print(f"{'metric':<{width}} {'base q1/med/q3':>30} {'change q1/med/q3':>30} {'wins':>6}  claim")
     for m in spec:
         name, lower = m["name"], m["better"] == "lower"
         base = [b[name] for b, _ in pairs if b is not None and name in b]
@@ -90,7 +92,7 @@ def report(workload, pairs, spec):
         better = cmed < bmed if lower else cmed > bmed
         holds = (sound and wins * 10 >= 9 * len(pairs) and better
                  and abs(cmed - bmed) > (bq3 - bq1))
-        print(f"{name:<10} {bq1:>9.4g} {bmed:>9.4g} {bq3:>9.4g}  {cq1:>9.4g} {cmed:>9.4g} {cq3:>9.4g}"
+        print(f"{name:<{width}} {bq1:>9.4g} {bmed:>9.4g} {bq3:>9.4g}  {cq1:>9.4g} {cmed:>9.4g} {cq3:>9.4g}"
               f" {wins:>3}/{len(pairs):<2}  {'holds' if holds else 'no'}")
     side = lambda r: "run failed" if r is None else r["failed"]
     print(f"failed ops per pair (base, change): {[(side(b), side(c)) for b, c in pairs]}")
@@ -112,7 +114,7 @@ def main():
     workloads = args.workload or ["serve_mixed"]
     seeds = parse_seeds(args.seeds)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-        spec = json.load(fh)["end_to_end"]
+        spec = json.load(fh)["per_layer" if args.trace else "end_to_end"]
 
     tmp = tempfile.mkdtemp(prefix="bench-pairs-")
     base_tree = os.path.join(tmp, "base")

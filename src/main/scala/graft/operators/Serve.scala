@@ -1408,38 +1408,165 @@ object Serve {
       }
   }
 
+  /** The flat resident tiers of a DiskANN shard, built once and shared by
+    * every [[LocalDiskAnnSearcher.withSearchListSize]] handle. SLOTS are
+    * the coded ids ascending, so slot order IS id order and (key, slot)
+    * comparisons break ties exactly as (key, id) did; the codes are one
+    * slot-major `byte[n·m]` block and the adjacency slot-indexed. Every id
+    * the graph or the entries name must have a code, and every code `m`
+    * bytes below `ksub` (`IllegalArgumentException` otherwise). */
+  private[operators] final class DiskAnnTiers(
+      graph: java.util.HashMap[Long, Array[Long]],
+      codeMap: java.util.HashMap[Long, Array[Byte]],
+      entryIds: Array[Long],
+      val model: ProductQuant.PQModel) {
+    val ids: Array[Long] = {
+      val a = new Array[Long](codeMap.size)
+      var i = 0
+      val it = codeMap.keySet().iterator()
+      while (it.hasNext) { a(i) = it.next(); i += 1 }
+      java.util.Arrays.sort(a)
+      a
+    }
+    def slotOf(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    private def requireSlot(id: Long, what: => String): Int = {
+      val s = slotOf(id)
+      require(s >= 0, s"$what $id has no PQ code in this shard")
+      s
+    }
+    val codes: Array[Byte] = {
+      val m = model.m
+      val out = new Array[Byte](ids.length * m)
+      var s = 0
+      while (s < ids.length) {
+        val c = codeMap.get(ids(s))
+        require(c.length == m, s"PQ code of id ${ids(s)} has ${c.length} bytes, expected $m")
+        var j = 0
+        while (j < m) {
+          require((c(j) & 0xFF) < model.ksub,
+            s"PQ code of id ${ids(s)} names codeword ${c(j) & 0xFF} of ${model.ksub}")
+          out(s * m + j) = c(j)
+          j += 1
+        }
+        s += 1
+      }
+      out
+    }
+    val adj: Array[Array[Int]] = {
+      graph.keySet().forEach(src => requireSlot(src, "graph node"))
+      ids.map { id =>
+        val dst = graph.get(id)
+        if (dst == null) Array.emptyIntArray else dst.map(requireSlot(_, s"graph edge $id →"))
+      }
+    }
+    val entries: Array[Int] = entryIds.map(requireSlot(_, "entry point"))
+
+    /** Resident bytes under the `pq_code_budget_gb` model: entry ids, an
+      * (id, code) per node and an (src, dst list) per adjacency row —
+      * `IndexStatics.diskannRamBytes`. */
+    val residentBytes: Long = {
+      var b = entryIds.length.toLong * 8L + ids.length.toLong * (8L + model.m)
+      graph.values().forEach(dst => b += 8L + dst.length.toLong * 8L)
+      b
+    }
+  }
+
+  /** Per-thread scratch of one DiskANN searcher, reused across queries. */
+  private final class DiskAnnScratch(n: Int, lutSize: Int, l: Int) {
+    /** Slots ADC-scored (or seeded) in the query — the rescoring set. */
+    val visited = new ServeKernels.WalkScratch(n, 0)
+    /** Neighbors already taken in the current hop. */
+    val hop = new ServeKernels.WalkScratch(n, 0)
+    /** Frontier members ([[LocalDiskAnnSearcher.search]]) or expanded
+      * nodes ([[LocalDiskAnnSearcher.searchBeam]]). */
+    val mark = new ServeKernels.WalkScratch(n, 0)
+    /** Visited slots in visit order, `nVisited` of them. */
+    val order = new Array[Int](n)
+    var nVisited = 0
+    /** Rescoring slots and their raw vectors. */
+    val want = new Array[Int](n)
+    val vecs = new Array[Array[Float]](n)
+    /** The query's ADC table: `lut(s·ksub + c)`. */
+    val lut = new Array[Double](lutSize)
+    /** Top-L of the fixed-hop frontier. */
+    val frontier = new ServeKernels.BoundedHeap(l)
+    /** The beam's candidate list and its merge buffer, (ADC, slot) sorted. */
+    var candD = new Array[Double](l)
+    var candS = new Array[Int](l)
+    var nextD = new Array[Double](l)
+    var nextS = new Array[Int](l)
+    /** The beam hop's freshly scored neighbors, best first. */
+    val fresh = new ServeKernels.MinQueue
+    /** Warm-cache hits and paged rows of the last [[LocalDiskAnnSearcher]] fetch. */
+    var hits = 0L
+    var paged = 0L
+
+    def visit(slot: Int): Boolean =
+      visited.visit(slot) && { order(nVisited) = slot; nVisited += 1; true }
+  }
+
   /** DiskANN serving arm — the reference's deployment model
     * (`src/index/diskann/diskann.cc:560-660`): PQ codes and the Vamana
     * graph are RAM-resident (the `pq_code_budget_gb` tier) and drive the
     * beam; full-precision vectors live on SSD and are read only for the
     * visited set's exact rescoring. The Spark rendering keeps the split:
-    * codes + adjacency + entries resident, raw vectors paged per search
-    * from a 4 KiB page store ([[PagedRawTier]] — the SSD fetch analog;
-    * `lastRawFetched` is the per-query IO-request observable).
+    * codes + adjacency + entries resident ([[DiskAnnTiers]]), raw vectors
+    * paged per search from a 4 KiB page store ([[PagedRawTier]] — the SSD
+    * fetch analog; `lastRawFetched` is the per-query IO-request
+    * observable).
     *
-    * The walk replicates the batch [[DiskAnn.search]] step-for-step —
+    * One kernel serves [[search]], [[searchBeam]] and [[rangeSearch]]:
+    * the same slot tiers, one flat `double[m·ksub]` ADC table per query
+    * (`pq_dist_lookup`, filled in `ProductQuant.lutLocal`'s operation
+    * order, folded `s = 0..m−1`, so every ADC is bit-identical to the
+    * batch one), per-thread visited stamps, and exact rescoring through a
+    * bounded (dist, id) heap behind the raw-sum gate
+    * ([[ServeKernels.l2Gate]]; no gate without rounding, where a raw-sqrt
+    * tie at the bound could drop a lower id). The verbs differ only in the
+    * hop policy and in when rescoring happens.
+    *
+    * [[search]] replicates the batch [[DiskAnn.search]] step-for-step —
     * seed = ADC top-L of the entries, each hop expands EVERY frontier
     * node (beamwidth folded into the hop, `diskann_config.h:73-77`),
     * pools frontier ∪ newly-scored, keeps top-L, and the answer is the
     * exact-distance top-k over the FULL visited set — so with the same
     * index and codebook the result is bit-identical (ServeSpec-gated).
-    * `allowed` applies at the rescoring fetch, matching the batch
-    * `filter` semantics (ADC steering is unfiltered on both sides). */
-  final class LocalDiskAnnSearcher(
-      adj: java.util.HashMap[Long, Array[Long]],
-      codes: java.util.HashMap[Long, Array[Byte]],
-      entries: Array[Long],
-      model: ProductQuant.PQModel,
+    * Its `lastNdis` counts every entry and, per hop, every DISTINCT
+    * neighbor of the frontier, already-visited ones included (the batch
+    * hop re-scores them; no ADC is memoized across hops). `allowed`
+    * applies at the rescoring fetch, matching the batch `filter`
+    * semantics (ADC steering is unfiltered on both sides). */
+  final class LocalDiskAnnSearcher private (
+      tiers: DiskAnnTiers,
       raw: RawTier,
       searchListSize: Int,
       beamIters: Int,
       // the index's own rounding contract (DiskAnnIndex.roundDigits):
       // None = raw doubles, matching a batch index built without rounding
-      roundDist: Option[Int] = Some(4)
+      roundDist: Option[Int]
   ) {
+    def this(
+        adj: java.util.HashMap[Long, Array[Long]],
+        codes: java.util.HashMap[Long, Array[Byte]],
+        entries: Array[Long],
+        model: ProductQuant.PQModel,
+        raw: RawTier,
+        searchListSize: Int,
+        beamIters: Int,
+        roundDist: Option[Int] = Some(4)) =
+      this(new DiskAnnTiers(adj, codes, entries, model), raw, searchListSize, beamIters, roundDist)
+
+    import ServeKernels._
+    import tiers.{adj, codes, ids}
+
+    require(searchListSize >= 1, s"search_list_size must be >= 1, got $searchListSize")
+
+    private val m = tiers.model.m
+    private val ksub = tiers.model.ksub
+    private val dsub = tiers.model.dsub
     private val rd: Int = roundDist.getOrElse(-1)
-    @inline private def contract(x: Double): Double =
-      if (rd >= 0) sparkRound(x, rd) else x
+    private val unit = math.pow(10d, -rd.toDouble)
+
     @volatile var lastNdis: Long = 0L
     @volatile var lastRawFetched: Long = 0L
     @volatile var lastVisited: Long = 0L
@@ -1451,81 +1578,55 @@ object Serve {
     /** hops the last [[searchBeam]] walk took to converge. */
     @volatile var lastHops: Long = 0L
 
+    private val scratch = ThreadLocal.withInitial[DiskAnnScratch](
+      () => new DiskAnnScratch(ids.length, m * ksub, searchListSize))
+
     // WARM-NODE CACHE (`diskann.cc:714-726`, `search_cache_budget_gb` +
     // `GenerateCacheList`: the reference BFS's from the medoid and pins the
     // first `num_nodes_to_cache` levels' raw data in RAM, because entry-
     // adjacent nodes recur in EVERY query's visited set). Same model here:
-    // a bounded entry-BFS set of exact raw vectors consulted before the
-    // paged fetch. Values are the raw tier's own vectors, so answers are
-    // bit-identical cache on/off (ServeSpec-gated); only the IO observables
-    // move. volatile for safe publication to router pool threads.
-    @volatile private var warmCache: java.util.HashMap[Long, Array[Float]] = null
+    // a bounded entry-BFS set of exact raw vectors, slot-indexed (null =
+    // not cached), consulted before the paged fetch. Values are the raw
+    // tier's own vectors, so answers are bit-identical cache on/off
+    // (ServeSpec-gated); only the IO observables move. volatile for safe
+    // publication to router pool threads.
+    @volatile private var warmCache: Array[Array[Float]] = null
 
     /** BFS from the entry points over the resident graph until `budget`
       * nodes, fetch their raw vectors ONCE, keep them resident. Level
       * order with sorted adjacency makes the cached set deterministic. */
     def enableWarmCache(budget: Int): this.type = {
-      val picked = new java.util.LinkedHashSet[Long]()
-      var frontier: Seq[Long] = entries.toSeq.distinct
-      frontier.foreach(id => if (picked.size < budget) picked.add(id))
-      while (frontier.nonEmpty && picked.size < budget) {
-        val next = scala.collection.mutable.ArrayBuffer.empty[Long]
-        val fit = frontier.iterator
-        while (fit.hasNext && picked.size < budget) {
-          val ns = adj.get(fit.next())
-          if (ns != null) {
-            var i = 0
-            while (i < ns.length && picked.size < budget) {
-              if (picked.add(ns(i))) next += ns(i)
-              i += 1
-            }
-          }
+      val picked = scala.collection.mutable.ArrayBuffer.empty[Int]
+      val in = new Array[Boolean](ids.length)
+      def pick(s: Int): Boolean =
+        picked.length < budget && !in(s) && { in(s) = true; picked += s; true }
+      var frontier = tiers.entries.distinct
+      frontier.foreach(pick)
+      while (frontier.nonEmpty && picked.length < budget) {
+        val next = scala.collection.mutable.ArrayBuffer.empty[Int]
+        var f = 0
+        while (f < frontier.length && picked.length < budget) {
+          adj(frontier(f)).foreach(s => if (pick(s)) next += s)
+          f += 1
         }
-        frontier = next.toSeq
+        frontier = next.toArray
       }
-      import scala.jdk.CollectionConverters._
-      warmCache = raw.fetch(picked.iterator().asScala.toSeq)
+      val got = raw.fetch(picked.map(ids(_)).toSeq)
+      val cache = new Array[Array[Float]](ids.length)
+      picked.foreach(s => cache(s) = got.get(ids(s)))
+      warmCache = cache
       this
     }
 
     /** Nodes resident in the warm cache (0 when disabled). */
     def warmCachedNodes: Long =
-      if (warmCache == null) 0L else warmCache.size.toLong
+      if (warmCache == null) 0L else warmCache.count(_ != null).toLong
 
     /** Resident bytes the warm cache adds on top of [[residentBytes]]
       * (ids + fp32 vectors) — the `search_cache_budget_gb` spend. */
-    def residentCacheBytes: Long = {
-      if (warmCache == null) return 0L
-      var s = 0L
-      val it = warmCache.values().iterator()
-      while (it.hasNext) s += 8L + it.next().length.toLong * 4L
-      s
-    }
-
-    /** Raw vectors for `want`: warm-cache hits first, one paged fetch for
-      * the misses. Sets the per-query IO observables. */
-    private def fetchRaw(want: Seq[Long]): java.util.HashMap[Long, Array[Float]] = {
-      val cache = warmCache
-      if (cache == null) {
-        val m = raw.fetch(want)
-        lastCacheHits = 0L
-        lastRawFetched = m.size.toLong
-        m
-      } else {
-        val m = new java.util.HashMap[Long, Array[Float]]()
-        val misses = scala.collection.mutable.ArrayBuffer.empty[Long]
-        want.foreach { id =>
-          val v = cache.get(id)
-          if (v != null) m.put(id, v) else misses += id
-        }
-        lastCacheHits = m.size.toLong
-        val paged = raw.fetch(misses.toSeq)
-        lastRawFetched = paged.size.toLong
-        val it = paged.entrySet().iterator()
-        while (it.hasNext) { val e = it.next(); m.put(e.getKey, e.getValue) }
-        m
-      }
-    }
+    def residentCacheBytes: Long =
+      if (warmCache == null) 0L
+      else warmCache.iterator.filter(_ != null).map(8L + _.length.toLong * 4L).sum
 
     /** DiskANN retains raw data (on "SSD") — V8 true, V7 pages it. */
     def hasRawData: Boolean = true
@@ -1542,88 +1643,221 @@ object Serve {
       * L, so the handle inherits it — a tuned deployment keeps the
       * `search_cache_budget_gb` latency win without re-running the BFS). */
     def withSearchListSize(l: Int): LocalDiskAnnSearcher = {
-      val s = new LocalDiskAnnSearcher(adj, codes, entries, model, raw, l, beamIters, roundDist)
+      val s = new LocalDiskAnnSearcher(tiers, raw, l, beamIters, roundDist)
       s.warmCache = warmCache
       s
     }
 
     /** Resident bytes of the RAM tier: codes + adjacency + entries (the
       * `pq_code_budget_gb` model — raw vectors are NOT in this number). */
-    def residentBytes: Long = {
-      var s = entries.length.toLong * 8L
-      val ci = codes.entrySet().iterator()
-      while (ci.hasNext) { s += 8L + ci.next().getValue.length.toLong; }
-      val ai = adj.entrySet().iterator()
-      while (ai.hasNext) { s += 8L + ai.next().getValue.length.toLong * 8L }
-      s
-    }
+    def residentBytes: Long = tiers.residentBytes
 
+    /** Serving-side V7: warm-cache hits first, one paged fetch for the
+      * rest; absent ids are skipped. Sets the IO observables. */
     def getVectorByIds(ids: Seq[Long]): Seq[(Long, Array[Float])] = {
-      val m = fetchRaw(ids)
+      val cache = warmCache
+      val m = new java.util.HashMap[Long, Array[Float]]()
+      val misses = scala.collection.mutable.ArrayBuffer.empty[Long]
+      ids.foreach { id =>
+        val s = tiers.slotOf(id)
+        val v = if (cache == null || s < 0) null else cache(s)
+        if (v != null) m.put(id, v) else misses += id
+      }
+      lastCacheHits = m.size.toLong
+      val paged = raw.fetch(misses.toSeq)
+      lastRawFetched = paged.size.toLong
+      m.putAll(paged)
       ids.flatMap(id => Option(m.get(id)).map(id -> _))
     }
 
-    private def lut(q: Array[Float]): Array[Array[Double]] =
-      ProductQuant.lutLocal(q, model)
+    private def checkQuery(q: Array[Float], k: Int): Unit = {
+      requireK(k)
+      requireDim(q, m * dsub)
+      require(searchListSize >= k, s"search_list_size $searchListSize must be >= k $k")
+    }
 
-    private def adc(t: Array[Array[Double]], code: Array[Byte]): Double = {
+    /** Start a query on this thread's scratch: nothing visited, the ADC
+      * table filled — `ProductQuant.lutLocal` verbatim, flattened. */
+    private def start(q: Array[Float]): DiskAnnScratch = {
+      val sc = scratch.get()
+      sc.visited.reset()
+      sc.nVisited = 0
+      val t = sc.lut
+      val books = tiers.model.codebooks
       var s = 0
+      while (s < m) {
+        var c = 0
+        while (c < ksub) {
+          val cw = books(s)(c)
+          var acc = 0.0d
+          var j = 0
+          while (j < dsub) {
+            val d = q(s * dsub + j).toDouble - cw(j).toDouble
+            acc += d * d
+            j += 1
+          }
+          t(s * ksub + c) = acc
+          c += 1
+        }
+        s += 1
+      }
+      sc
+    }
+
+    /** Raw ADC sum of a slot's code: table lookups folded `s = 0..m−1`. */
+    private def adcSum(t: Array[Double], slot: Int): Double = {
+      val base = slot * m
       var acc = 0.0d
-      while (s < model.m) { acc += t(s)(code(s) & 0xFF); s += 1 }
-      contract(math.sqrt(acc))
+      var s = 0
+      while (s < m) {
+        acc += t(s * ksub + (codes(base + s) & 0xFF))
+        s += 1
+      }
+      acc
+    }
+
+    /** A raw L2 sum under the index's rounding contract. */
+    private def finish(s: Double): Double =
+      if (rd >= 0) sparkRound(math.sqrt(s), rd) else math.sqrt(s)
+
+    /** The raw-sum gate of a full heap's worst key; none unrounded. */
+    private def gateOf(heap: BoundedHeap): Double =
+      if (rd >= 0 && heap.full) l2Gate(heap.worstKey, unit, Metric.L2) else Double.PositiveInfinity
+
+    /** Offer a raw sum to `heap` past `gate`; the heap's new gate. */
+    private def offer(heap: BoundedHeap, s: Double, slot: Int, gate: Double): Double =
+      if (!(s > gate) && heap.offer(finish(s), slot)) gateOf(heap) else gate
+
+    /** Raw vectors of `want(0 until n)` into `sc.vecs` (null where the raw
+      * tier lacks the id): warm-cache hits first, then one paged fetch for
+      * the misses. Sets `sc.hits` and `sc.paged`. */
+    private def fetch(sc: DiskAnnScratch, want: Array[Int], n: Int): Unit = {
+      val cache = warmCache
+      val vecs = sc.vecs
+      val misses = new Array[Long](n)
+      var nm = 0
+      var i = 0
+      while (i < n) {
+        vecs(i) = if (cache == null) null else cache(want(i))
+        if (vecs(i) == null) { misses(nm) = ids(want(i)); nm += 1 }
+        i += 1
+      }
+      val got = raw.fetch(scala.collection.immutable.ArraySeq.unsafeWrapArray(misses).take(nm))
+      sc.hits = (n - nm).toLong
+      sc.paged = got.size.toLong
+      if (nm > 0) {
+        i = 0
+        while (i < n) {
+          if (vecs(i) == null) vecs(i) = got.get(ids(want(i)))
+          i += 1
+        }
+      }
+    }
+
+    /** Exact top-k of the fetched `sc.vecs(0 until n)` (slots `want`),
+      * four vectors per fold, each sum gated before its sqrt and round. */
+    private def rescore(
+        q: Array[Float], sc: DiskAnnScratch, want: Array[Int], n: Int,
+        heap: BoundedHeap, gate0: Double): Double = {
+      val vecs = sc.vecs
+      val lane = new Array[Int](4)
+      val sums = new Array[Double](4)
+      var gate = gate0
+      var l = 0
+      var i = 0
+      while (i < n) {
+        if (vecs(i) != null) {
+          lane(l) = i
+          l += 1
+          if (l == 4) {
+            l2Sum4(q, vecs(lane(0)), vecs(lane(1)), vecs(lane(2)), vecs(lane(3)), sums)
+            var j = 0
+            while (j < 4) { gate = offer(heap, sums(j), want(lane(j)), gate); j += 1 }
+            l = 0
+          }
+        }
+        i += 1
+      }
+      var j = 0
+      while (j < l) { gate = offer(heap, l2Sum(q, vecs(lane(j))), want(lane(j)), gate); j += 1 }
+      java.util.Arrays.fill(vecs.asInstanceOf[Array[AnyRef]], 0, n, null)
+      gate
+    }
+
+    /** Drain a slot-keyed heap as ranked `(id, distance)` rows. */
+    private def ranked(heap: BoundedHeap): Seq[(Long, Double)] = {
+      val (ks, ss) = heap.drain()
+      Array.tabulate(ks.length)(j => (ids(ss(j).toInt), ks(j))).toSeq
     }
 
     def search(
         q: Array[Float], k: Int,
         allowed: Long => Boolean = null): Seq[(Long, Double)] =
       Telemetry.timed("SERVE", "search_diskann") {
-        require(searchListSize >= k, s"search_list_size $searchListSize must be >= k $k")
-        val t = lut(q)
+        checkQuery(q, k)
+        val sc = start(q)
+        val t = sc.lut
+        val front = sc.frontier
+        front.clear()
         var ndis = 0L
-        def adcOf(id: Long): Option[(Double, Long)] = {
-          val c = codes.get(id)
-          if (c == null) None
-          else { ndis += 1; Some((adc(t, c), id)) }
+        var gate = Double.PositiveInfinity
+        tiers.entries.foreach { e =>
+          sc.visit(e)
+          ndis += 1
+          gate = offer(front, adcSum(t, e), e, gate)
         }
-        val visited = scala.collection.mutable.LinkedHashSet.empty[Long]
-        entries.foreach(visited += _)
-        var frontier = entries.toSeq.flatMap(adcOf)
-          .sortBy { case (d, id) => (d, id) }
-          .take(searchListSize)
-        for (_ <- 1 to beamIters) {
-          // every frontier node expands; new candidates ADC-score once
-          val cands = frontier.flatMap { case (_, id) =>
-            val ns = adj.get(id)
-            if (ns == null) Array.empty[Long] else ns
-          }.distinct
-          cands.foreach(visited += _)
-          val scored = cands.flatMap(adcOf)
-          // pool = frontier ∪ scored, deduped by id (same id ⇒ same ADC
-          // dist — the batch union+distinct), then top-L by (dist, id)
-          val seen = scala.collection.mutable.HashSet.empty[Long]
-          frontier = (frontier ++ scored)
-            .filter { case (_, id) => seen.add(id) }
-            .sortBy { case (d, id) => (d, id) }
-            .take(searchListSize)
+        var fs = front.drain()
+        var hop = 0
+        while (hop < beamIters) {
+          // pool = frontier ∪ its distinct neighbors (each ADC-scored and
+          // counted, members included), then top-L by (ADC, id)
+          sc.hop.reset()
+          sc.mark.reset()
+          gate = Double.PositiveInfinity
+          val (fk, fslots) = fs
+          var i = 0
+          while (i < fslots.length) {
+            val f = fslots(i).toInt
+            if (sc.mark.visit(f) && front.offer(fk(i), f)) gate = gateOf(front)
+            i += 1
+          }
+          i = 0
+          while (i < fslots.length) {
+            val ns = adj(fslots(i).toInt)
+            var j = 0
+            while (j < ns.length) {
+              val nb = ns(j)
+              if (sc.hop.visit(nb)) {
+                sc.visit(nb)
+                ndis += 1
+                val s = adcSum(t, nb)
+                if (!sc.mark.seen(nb)) gate = offer(front, s, nb, gate)
+              }
+              j += 1
+            }
+            i += 1
+          }
+          fs = front.drain()
+          hop += 1
         }
         lastNdis = ndis
-        lastVisited = visited.size.toLong
+        lastVisited = sc.nVisited.toLong
         // the SSD fetch: exact rescoring of the full visited set (warm-
         // cache hits resident, misses one bounded sector-store fetch)
-        val want = visited.toSeq.filter(id => allowed == null || allowed(id))
-        val rawm = fetchRaw(want)
-        want.flatMap { id =>
-          Option(rawm.get(id)).map { v =>
-            var s = 0.0d
-            var i = 0
-            while (i < q.length) {
-              val d = q(i).toDouble - v(i).toDouble
-              s += d * d
-              i += 1
-            }
-            (id, contract(math.sqrt(s)))
-          }
-        }.sortBy { case (id, d) => (d, id) }.take(k)
+        val want = sc.want
+        var n = 0
+        var i = 0
+        while (i < sc.nVisited) {
+          val s = sc.order(i)
+          if (allowed == null || allowed(ids(s))) { want(n) = s; n += 1 }
+          i += 1
+        }
+        fetch(sc, want, n)
+        lastCacheHits = sc.hits
+        lastRawFetched = sc.paged
+        val heap = new BoundedHeap(k)
+        rescore(q, sc, want, n, heap, Double.PositiveInfinity)
+        ranked(heap)
       }
 
     /** Convergent beam search with MID-WALK exact rescoring — the loop
@@ -1646,112 +1880,104 @@ object Serve {
         q: Array[Float], k: Int, beamWidth: Int = 8,
         allowed: Long => Boolean = null): Seq[(Long, Double)] =
       Telemetry.timed("SERVE", "search_diskann_beam") {
-        require(searchListSize >= k, s"search_list_size $searchListSize must be >= k $k")
-        require(beamWidth >= 1, s"beamWidth $beamWidth must be >= 1")
-        val t = lut(q)
-        var ndis = 0L
-        val seen = new java.util.HashSet[Long]()
-        val expanded = new java.util.HashSet[Long]()
-        // candidate list: primitive parallel arrays, (adcDist, id)-sorted,
-        // truncated to L — the per-hop merge is linear, never a re-sort
-        val L = searchListSize
-        var candD = new Array[Double](0)
-        var candI = new Array[Long](0)
-        @inline def lt(d1: Double, i1: Long, d2: Double, i2: Long): Boolean =
-          d1 < d2 || (d1 == d2 && i1 < i2)
-        locally {
-          val scored = entries.toSeq.filter(seen.add).flatMap { id =>
-            val c = codes.get(id)
-            if (c == null) None else { ndis += 1; Some((adc(t, c), id)) }
-          }.sortBy { case (d, id) => (d, id) }.take(L)
-          candD = scored.map(_._1).toArray
-          candI = scored.map(_._2).toArray
+        checkQuery(q, k)
+        val heap = new BoundedHeap(k)
+        beam(q, beamWidth, allowed, heap)
+        ranked(heap)
+      }
+
+    /** The convergent walk: every expanded node's exact distance goes to
+      * `heap` (allowed ids only). Sets the walk's observables. */
+    private def beam(
+        q: Array[Float], beamWidth: Int, allowed: Long => Boolean, heap: BoundedHeap): Unit = {
+      require(beamWidth >= 1, s"beamWidth $beamWidth must be >= 1")
+      val sc = start(q)
+      val t = sc.lut
+      val expanded = sc.mark
+      expanded.reset()
+      val L = searchListSize
+      var ndis = 0L
+      // the list: (ADC, slot) sorted, truncated to L; the seed is the
+      // distinct entries' top-L
+      val seed = sc.frontier
+      seed.clear()
+      tiers.entries.foreach { e =>
+        if (sc.visit(e)) { ndis += 1; seed.offer(finish(adcSum(t, e)), e) }
+      }
+      val (sk, ss) = seed.drain()
+      var cd = sc.candD
+      var cs = sc.candS
+      var cn = sk.length
+      var i = 0
+      while (i < cn) { cd(i) = sk(i); cs(i) = ss(i).toInt; i += 1 }
+      val toExpand = new Array[Int](beamWidth)
+      val fresh = sc.fresh
+      var gate = Double.PositiveInfinity
+      var hops, fetched, cacheHits, nExpanded = 0L
+      var converged = false
+      while (!converged) {
+        // best unexpanded candidates in the list, up to beamWidth
+        var ne = 0
+        i = 0
+        while (i < cn && ne < beamWidth) {
+          if (!expanded.seen(cs(i))) { toExpand(ne) = cs(i); ne += 1 }
+          i += 1
         }
-        val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-        var hops = 0L
-        var fetched = 0L
-        var cacheHits = 0L
-        var converged = false
-        while (!converged) {
-          // best unexpanded candidates in the list, up to beamWidth
-          val toExpand = scala.collection.mutable.ArrayBuffer.empty[Long]
-          var i = 0
-          while (i < candI.length && toExpand.length < beamWidth) {
-            if (!expanded.contains(candI(i))) toExpand += candI(i)
+        if (ne == 0) converged = true
+        else {
+          hops += 1
+          // the SSD hop: the expanded nodes' raw vectors, one fetch of
+          // their 4 KiB pages (warm-cache hits skip the read)
+          fetch(sc, toExpand, ne)
+          fetched += sc.paged
+          cacheHits += sc.hits
+          fresh.clear()
+          i = 0
+          while (i < ne) {
+            val e = toExpand(i)
+            expanded.visit(e)
+            nExpanded += 1
+            val v = sc.vecs(i)
+            sc.vecs(i) = null
+            if (v != null && (allowed == null || allowed(ids(e)))) gate = offer(heap, l2Sum(q, v), e, gate)
+            val ns = adj(e)
+            var j = 0
+            while (j < ns.length) {
+              val nb = ns(j)
+              if (sc.visit(nb)) { ndis += 1; fresh.push(finish(adcSum(t, nb)), nb) }
+              j += 1
+            }
             i += 1
           }
-          if (toExpand.isEmpty) converged = true
-          else {
-            hops += 1
-            // the SSD hop: the beamWidth expanded nodes' raw vectors, one
-            // fetch of their 4 KiB pages (warm-cache hits skip the read)
-            val rawm = fetchRaw(toExpand.toSeq)
-            fetched += lastRawFetched
-            cacheHits += lastCacheHits
-            val freshD = scala.collection.mutable.ArrayBuffer.empty[Double]
-            val freshI = scala.collection.mutable.ArrayBuffer.empty[Long]
-            toExpand.foreach { id =>
-              expanded.add(id)
-              val v = rawm.get(id)
-              if (v != null) {
-                var s = 0.0d
-                var j = 0
-                while (j < q.length) {
-                  val d = q(j).toDouble - v(j).toDouble
-                  s += d * d
-                  j += 1
-                }
-                results += ((id, contract(math.sqrt(s))))
-              }
-              val ns = adj.get(id)
-              if (ns != null) {
-                var j = 0
-                while (j < ns.length) {
-                  val nid = ns(j)
-                  if (seen.add(nid)) {
-                    val c = codes.get(nid)
-                    if (c != null) { ndis += 1; freshD += adc(t, c); freshI += nid }
-                  }
-                  j += 1
-                }
-              }
+          // one linear merge of the sorted fresh scores into the list,
+          // truncated at L (the list's own comparison, `<` then ids)
+          if (fresh.nonEmpty) {
+            val nd = sc.nextD
+            val ns = sc.nextS
+            var a = 0
+            var o = 0
+            while (o < L && (a < cn || fresh.nonEmpty)) {
+              val takeA = !fresh.nonEmpty || (a < cn && {
+                val d1 = cd(a); val d2 = fresh.topKey
+                d1 < d2 || (d1 == d2 && cs(a) < fresh.topSlot)
+              })
+              if (takeA) { nd(o) = cd(a); ns(o) = cs(a); a += 1 }
+              else { nd(o) = fresh.topKey; ns(o) = fresh.topSlot; fresh.pop() }
+              o += 1
             }
-            if (freshI.nonEmpty) {
-              // sort the ≤ beamWidth·degree fresh scores, then one linear
-              // merge with the already-sorted list, truncated at L
-              val ord = (0 until freshI.length).sortBy(j => (freshD(j), freshI(j)))
-              val fd = ord.map(freshD(_)).toArray
-              val fi = ord.map(freshI(_)).toArray
-              val outN = math.min(L, candI.length + fi.length)
-              val nd = new Array[Double](outN)
-              val ni = new Array[Long](outN)
-              var a = 0
-              var b = 0
-              var o = 0
-              while (o < outN) {
-                val takeA = b >= fi.length ||
-                  (a < candI.length && lt(candD(a), candI(a), fd(b), fi(b)))
-                if (takeA) { nd(o) = candD(a); ni(o) = candI(a); a += 1 }
-                else { nd(o) = fd(b); ni(o) = fi(b); b += 1 }
-                o += 1
-              }
-              candD = nd
-              candI = ni
-            }
+            sc.nextD = cd; sc.nextS = cs
+            cd = nd; cs = ns; cn = o
+            sc.candD = cd; sc.candS = cs
           }
         }
-        lastNdis = ndis
-        lastVisited = seen.size.toLong
-        lastExpanded = expanded.size.toLong
-        lastHops = hops
-        lastRawFetched = fetched
-        lastCacheHits = cacheHits
-        results
-          .filter { case (id, _) => allowed == null || allowed(id) }
-          .sortBy { case (id, d) => (d, id) }
-          .take(k)
-          .toSeq
       }
+      lastNdis = ndis
+      lastVisited = sc.nVisited.toLong
+      lastExpanded = nExpanded
+      lastHops = hops
+      lastRawFetched = fetched
+      lastCacheHits = cacheHits
+    }
 
     /** V5 on the SSD tier — the reference ships DiskANN range search
       * through the generic iterator-backed fallback
@@ -1761,19 +1987,20 @@ object Serve {
       * with the convergent beam as the stream: the walk runs to
       * convergence at `searchListSize` (the width knob the protocol
       * tunes), every expanded node's EXACT distance is already paid for
-      * with its sector read, and the answer is the expanded pool's
-      * [rangeFilter, radius) shell — (dist, id) sorted, L2-ascending
-      * semantics like the graph arm. `allowed` applies to answers only
-      * (walk routes through filtered nodes). L ≥ n on a connected graph
-      * recovers the exact shell — ServeSpec-gated against the batch
-      * brute-force range. */
+      * with its sector read, and the answer is the [rangeFilter, radius)
+      * shell of the expanded pool's exact top-L — (dist, id) sorted,
+      * L2-ascending semantics like the graph arm. `allowed` applies to
+      * answers only (walk routes through filtered nodes). L ≥ n on a
+      * connected graph recovers the exact shell — ServeSpec-gated against
+      * the batch brute-force range. */
     def rangeSearch(
         q: Array[Float], radius: Double, rangeFilter: Double,
         beamWidth: Int = 8, allowed: Long => Boolean = null): Seq[(Long, Double)] =
       Telemetry.timed("SERVE", "range_diskann") {
-        val pool = searchBeam(q, searchListSize, beamWidth, allowed)
-        pool.filter { case (_, d) => d >= rangeFilter && d < radius }
-          .sortBy { case (id, d) => (d, id) }
+        requireDim(q, m * dsub)
+        val heap = new BoundedHeap(searchListSize)
+        beam(q, beamWidth, allowed, heap)
+        ranked(heap).filter { case (_, d) => d >= rangeFilter && d < radius }
       }
   }
 

@@ -129,6 +129,7 @@ private[operators] object ServeKernels {
     private var n = 0
 
     def full: Boolean = n == cap
+    def clear(): Unit = n = 0
     def worstKey: Double = keys(0)
     def worstId: Long = ids(0)
 
@@ -197,6 +198,7 @@ private[operators] object ServeKernels {
     private var n = 0
 
     def nonEmpty: Boolean = n > 0
+    def clear(): Unit = n = 0
     def topKey: Double = keys(0)
     def topSlot: Int = slots(0)
 
@@ -269,6 +271,9 @@ private[operators] object ServeKernels {
     /** Mark a slot visited; false when it already was. */
     def visit(slot: Int): Boolean =
       if (stamp(slot) == gen) false else { stamp(slot) = gen; true }
+
+    /** Whether a slot is visited in the current query. */
+    def seen(slot: Int): Boolean = stamp(slot) == gen
 
     def entryKnown(idx: Int): Boolean = entryStamp(idx) == gen
 
