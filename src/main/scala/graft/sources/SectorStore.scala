@@ -1,9 +1,11 @@
 package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, StandardOpenOption}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.SparkException
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -29,10 +31,11 @@ import org.apache.spark.util.SerializableConfiguration
   *    because each task streams its sorted partition and knows its row count
   *    only after the last row.
   *
-  * [[Reader]] keeps only the fence table resident (O(pages)) and fetches
-  * each hit page with one positioned read. Ids are unique and sorted, so
-  * every id maps to at most one page and a fetch of `w` distinct ids reads
-  * at most `w` pages. The Reader verifies the ascending-disjoint fence
+  * [[Reader]] keeps only the fence table resident (O(pages)) and maps
+  * each page file read-only (the reference's `enable_mmap`,
+  * `feature.h:40-46`), so reading a hit page is memory loads, not a
+  * syscall. Ids are unique and sorted, so every id maps to at most one
+  * page and a fetch of `w` distinct ids reads at most `w` pages. The Reader verifies the ascending-disjoint fence
   * invariant at open, so a store can never silently degrade to a scan.
   */
 object SectorStore extends Serializable { // the write task's closure refers to it
@@ -175,52 +178,63 @@ object SectorStore extends Serializable { // the write task's closure refers to 
 
   /** Open a store directory; None when it holds no valid page layout (no
     * `_pages-*` files, a damaged trailer, or fences that are not
-    * ascending-disjoint) — callers then re-materialize with [[save]]. */
-  def openIfValid(spark: SparkSession, dir: String): Option[Reader] = {
-    var opened: List[FSDataInputStream] = Nil
+    * ascending-disjoint) — callers then re-materialize with [[save]]. A
+    * store on a non-`file:` filesystem is copied once into a local temp
+    * dir (deleted at JVM exit), so every store is read through the same
+    * read-only mappings. */
+  def openIfValid(spark: SparkSession, dir: String): Option[Reader] =
     try {
       val p = new Path(dir)
       val fs = rawFs(p, spark.sparkContext.hadoopConfiguration)
       val files = fs.listStatus(p).filter(_.getPath.getName.startsWith(FilePrefix))
         .sortBy(_.getPath.getName)
       require(files.nonEmpty, s"no page files under $dir")
+      val local = fs match {
+        case _: RawLocalFileSystem => files.map(st => java.nio.file.Paths.get(st.getPath.toUri))
+        case _ =>
+          val copy = graft.queries.StreamStage.dir("graft-rawstore-")
+          files.map { st =>
+            val to = copy.resolve(st.getPath.getName)
+            val in = fs.open(st.getPath)
+            try Files.copy(in, to) finally in.close()
+            to
+          }
+      }
       val shapes = Array.newBuilder[(Int, Int)] // (dim, stride) of each non-empty file
       val first, last, pos = Array.newBuilder[Long]
       val fileOf, rowsOf = Array.newBuilder[Int]
-      val streams = files.zipWithIndex.map { case (st, fi) =>
-        val in = fs.open(st.getPath)
-        opened ::= in
-        val len = st.getLen
-        val t = ByteBuffer.allocate(TrailerBytes).order(ByteOrder.LITTLE_ENDIAN)
-        in.readFully(len - TrailerBytes, t.array())
-        val rows = t.getLong(0)
-        val (dim, rpp, stride, pages) = (t.getInt(8), t.getInt(12), t.getInt(16), t.getInt(20))
-        require(t.getLong(24) == Magic && len == pages.toLong * (stride + 16) + TrailerBytes &&
+      val maps = local.zipWithIndex.map { case (f, fi) =>
+        val ch = FileChannel.open(f, StandardOpenOption.READ)
+        val b = try {
+          require(ch.size() <= Int.MaxValue, s"page file $f exceeds 2 GiB")
+          ch.map(FileChannel.MapMode.READ_ONLY, 0L, ch.size()).order(ByteOrder.LITTLE_ENDIAN)
+        } finally ch.close()
+        val len = b.capacity()
+        val t = len - TrailerBytes
+        val rows = b.getLong(t)
+        val (dim, rpp, stride, pages) = (b.getInt(t + 8), b.getInt(t + 12), b.getInt(t + 16), b.getInt(t + 20))
+        require(b.getLong(t + 24) == Magic && len == pages.toLong * (stride + 16) + TrailerBytes &&
           (rows == 0L || pages == (rows + rpp - 1) / rpp && stride % PageBytes == 0 &&
             stride.toLong >= rpp.toLong * (8 + 4 * dim)))
         if (rows > 0) shapes += ((dim, stride))
-        val fb = ByteBuffer.allocate(pages * 16).order(ByteOrder.LITTLE_ENDIAN)
-        in.readFully(pages.toLong * stride, fb.array())
+        val fences = pages * stride
         (0 until pages).foreach { i =>
-          first += fb.getLong(16 * i)
-          last += fb.getLong(16 * i + 8)
+          first += b.getLong(fences + 16 * i)
+          last += b.getLong(fences + 16 * i + 8)
           pos += i.toLong * stride
           fileOf += fi
           rowsOf += math.min(rpp.toLong, rows - i.toLong * rpp).toInt
         }
-        in
+        b
       }
       val shape = shapes.result().distinct
       require(shape.length <= 1, s"mixed dimensions under $dir")
       val (dim, stride) = shape.headOption.getOrElse((0, 0))
-      Some(new Reader(streams, first.result(), last.result(), pos.result(), fileOf.result(),
+      Some(new Reader(maps, first.result(), last.result(), pos.result(), fileOf.result(),
         rowsOf.result(), dim, stride))
     } catch {
-      case scala.util.control.NonFatal(_) =>
-        opened.foreach(_.close())
-        None
+      case scala.util.control.NonFatal(_) => None
     }
-  }
 
   /** One fetch's vectors and its IO. */
   final case class Fetched(
@@ -231,11 +245,11 @@ object SectorStore extends Serializable { // the write task's closure refers to 
       rowsScanned: Long)
 
   /** Fence-table reader over a [[save]]d store. Resident state is the page
-    * fences only; vectors are paged per fetch through one stream per file,
-    * open for the reader's life. Positioned reads carry their own offset, so
-    * concurrent fetches share the streams without a lock. */
+    * fences and one read-only mapping per file; a fetch reads its pages
+    * with absolute gets only, so concurrent fetches share the mappings
+    * without a lock. */
   final class Reader private[sources] (
-      in: Array[FSDataInputStream],
+      maps: Array[ByteBuffer],
       first: Array[Long], // per page, ascending across files
       last: Array[Long],
       pos: Array[Long], // offset of the page in its file
@@ -266,8 +280,8 @@ object SectorStore extends Serializable { // the write task's closure refers to 
     }
 
     /** Raw vectors for `ids` (absent ids skipped): the distinct ids in
-      * ascending order, one positioned read per hit page, each page's
-      * records walked once alongside the wanted ids that fall in it. */
+      * ascending order, each hit page's records walked once alongside the
+      * wanted ids that fall in it. */
     def fetch(ids: Seq[Long]): Fetched = {
       val want = ids.toArray
       java.util.Arrays.sort(want)
@@ -278,23 +292,24 @@ object SectorStore extends Serializable { // the write task's closure refers to 
         i += 1
       }
       val out = new java.util.HashMap[Long, Array[Float]]()
-      val buf = ByteBuffer.allocate(stride).order(ByteOrder.LITTLE_ENDIAN)
       var pages, scanned = 0L
       i = 0
       while (i < n) {
         val p = pageOf(want(i))
         if (p < 0) i += 1
         else {
-          in(fileOf(p)).readFully(pos(p), buf.array(), 0, stride)
+          val b = maps(fileOf(p))
+          val at = pos(p).toInt
           pages += 1
           scanned += rowsOf(p)
           var r = 0
           while (i < n && want(i) <= last(p)) {
-            while (r < rowsOf(p) && buf.getLong(r * rec) < want(i)) r += 1
-            if (r < rowsOf(p) && buf.getLong(r * rec) == want(i)) {
+            while (r < rowsOf(p) && b.getLong(at + r * rec) < want(i)) r += 1
+            if (r < rowsOf(p) && b.getLong(at + r * rec) == want(i)) {
               val v = new Array[Float](dim)
-              buf.position(r * rec + 8)
-              buf.asFloatBuffer().get(v)
+              val off = at + r * rec + 8
+              var j = 0
+              while (j < dim) { v(j) = b.getFloat(off + 4 * j); j += 1 }
               out.put(want(i), v)
             }
             i += 1
@@ -304,6 +319,8 @@ object SectorStore extends Serializable { // the write task's closure refers to 
       Fetched(out, n.toLong, pages, pages * stride, scanned)
     }
 
-    override def close(): Unit = in.foreach(_.close())
+    /** Nothing to release eagerly: a mapping is unmapped once the reader
+      * is collected, so fetches racing a close stay safe. */
+    override def close(): Unit = ()
   }
 }
