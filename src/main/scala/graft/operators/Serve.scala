@@ -1757,12 +1757,11 @@ object Serve {
     /** Exact top-k of the fetched `sc.vecs(0 until n)` (slots `want`),
       * four vectors per fold, each sum gated before its sqrt and round. */
     private def rescore(
-        q: Array[Float], sc: DiskAnnScratch, want: Array[Int], n: Int,
-        heap: BoundedHeap, gate0: Double): Double = {
+        q: Array[Float], sc: DiskAnnScratch, want: Array[Int], n: Int, heap: BoundedHeap): Unit = {
       val vecs = sc.vecs
       val lane = new Array[Int](4)
       val sums = new Array[Double](4)
-      var gate = gate0
+      var gate = Double.PositiveInfinity
       var l = 0
       var i = 0
       while (i < n) {
@@ -1781,7 +1780,6 @@ object Serve {
       var j = 0
       while (j < l) { gate = offer(heap, l2Sum(q, vecs(lane(j))), want(lane(j)), gate); j += 1 }
       java.util.Arrays.fill(vecs.asInstanceOf[Array[AnyRef]], 0, n, null)
-      gate
     }
 
     /** Drain a slot-keyed heap as ranked `(id, distance)` rows. */
@@ -1856,7 +1854,7 @@ object Serve {
         lastCacheHits = sc.hits
         lastRawFetched = sc.paged
         val heap = new BoundedHeap(k)
-        rescore(q, sc, want, n, heap, Double.PositiveInfinity)
+        rescore(q, sc, want, n, heap)
         ranked(heap)
       }
 
