@@ -7,9 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Metric, Serve, ShardedServe}
 import graft.plans.FastRound
 
-/** The dense serving kernels without Spark: graph, IVF and SQ8 searchers
-  * built straight from local maps over seeded tie-dense corpora with
-  * NaN/±Inf components, duplicate vectors, distances inside FastRound's
+/** The dense and binary serving kernels without Spark: graph, IVF, SQ8,
+  * PQ and packed-binary searchers built straight from local maps over
+  * seeded tie-dense corpora with NaN/±Inf components, duplicate vectors, distances inside FastRound's
   * boundary band, k ≥ n and filters passing all, 7% or none of the ids.
   * Every scan must equal a naive reference that rounds every candidate
   * and sorts by (distance, id); the bounded graph walk is pinned by
@@ -245,6 +245,190 @@ class DenseKernelSpec extends AnyFunSuite {
                 .sortBy { case (id, x) => (x, id) }
               assert(bits(searcher.rangeSearch(q, radius, rf, nprobe, allowed)) == bits(want))
               assert(searcher.lastCandidates == scanned.size)
+            }
+          }
+        }
+      }
+    }
+  }
+
+  test("PQ coded knn, filtered knn and range scans equal the naive round-every-candidate reference") {
+    val rnd = new Random(6091L)
+    (1 to 8).foreach { trial =>
+      val (d, m) = Seq((4, 2), (8, 4), (6, 3), (16, 8))(trial % 4)
+      val dsub = d / m
+      val ksub = 2 + rnd.nextInt(40)
+      val n = 20 + rnd.nextInt(300)
+      val s = ivfShard(rnd, n, d, 2 + rnd.nextInt(5))
+      val model = graft.operators.ProductQuant.PQModel(m, ksub, dsub,
+        Array.fill(m, ksub)(Array.fill(dsub)((rnd.nextInt(17) - 8) * 0.125f)))
+      val codes = s.ids.map(id => id -> Array.fill(m)(rnd.nextInt(ksub).toByte)).toMap
+      val lists = new java.util.HashMap[Long, (Array[Long], Array[Array[Byte]])]()
+      s.members.foreach { case (cid, is) => lists.put(cid, (is.map(s.ids).toArray, is.map(i => codes(s.ids(i))).toArray)) }
+      val raw = new java.util.HashMap[Long, Array[Float]]()
+      s.ids.indices.foreach(i => raw.put(s.ids(i), s.vs(i)))
+      val searcher = new Serve.LocalIvfPqSearcher(s.cents, lists, model, new Serve.ResidentRawTier(raw))
+      // per-subspace double folds, subspaces summed left to right
+      def adc(q: Array[Float], code: Array[Byte]): Double = {
+        var acc = 0.0d
+        (0 until m).foreach { sub =>
+          val cw = model.codebooks(sub)(code(sub) & 0xFF)
+          var part = 0.0d
+          (0 until dsub).foreach { j =>
+            val e = q(sub * dsub + j).toDouble - cw(j).toDouble
+            part += e * e
+          }
+          acc += part
+        }
+        FastRound.round(math.sqrt(acc), 4)
+      }
+      def byAdc(q: Array[Float], idx: Seq[Int]): Seq[(Long, Double)] =
+        idx.map(i => (s.ids(i), adc(q, codes(s.ids(i)))))
+          .sortWith { case ((i1, d1), (i2, d2)) =>
+            val c = java.lang.Double.compare(d1, d2)
+            c < 0 || (c == 0 && i1 < i2)
+          }
+      (queries(rnd, d) :+ Array.fill(d)(Float.NaN)).foreach { q =>
+        val order = naiveProbe(Metric.L2, s, q)
+        Seq(1, 2, s.cents.length).foreach { nprobe =>
+          PassRatios.foreach { ratio =>
+            val allowed = allowedBy(rnd, ratio)
+            val scanned = order.take(nprobe).flatMap(cid => s.members.getOrElse(cid, Nil))
+              .filter(i => allowed(s.ids(i)))
+            Seq((1, 1), (3, 10), (10, 40), (n + 5, n + 5)).foreach { case (k, reorderK) =>
+              val finalists = byAdc(q, scanned).take(reorderK)
+              val want = naiveTopK(Metric.L2, q, finalists.map { case (id, _) => (id, s.vs(((id - 7L) / 3L).toInt)) }, k)
+              val got = searcher.search(q, k, nprobe, reorderK, allowed)
+              assert(bits(got) == bits(want), s"trial $trial nprobe=$nprobe k=$k/$reorderK pass=$ratio")
+              assert(searcher.lastCandidates == scanned.size)
+              assert(searcher.lastRawFetched == finalists.size)
+            }
+            Seq((1.5, 0.0), (2.5, 1.0), (-1.0, 0.0)).foreach { case (radius, rf) =>
+              val want = byAdc(q, scanned).filter { case (_, x) => x >= rf && x < radius }
+                .sortBy { case (id, x) => (x, id) }
+              assert(bits(searcher.rangeSearch(q, radius, rf, nprobe, allowed)) == bits(want))
+              assert(searcher.lastCandidates == scanned.size)
+              assert(searcher.lastRawFetched == 0L)
+            }
+          }
+        }
+      }
+    }
+  }
+
+  /** Packed signatures with few set bits (dense Hamming ties), all-zero
+    * rows (|or| = 0 against the zero query), all-one rows and duplicates. */
+  private def signatures(rnd: Random, n: Int, w: Int): Array[Array[Long]] = {
+    val vs = new Array[Array[Long]](n)
+    var i = 0
+    while (i < n) {
+      vs(i) = rnd.nextInt(8) match {
+        case 0 => new Array[Long](w)
+        case 1 => Array.fill(w)(-1L)
+        case 2 if i > 0 => vs(rnd.nextInt(i)).clone()
+        case _ => Array.fill(w)(rnd.nextLong() & rnd.nextLong() & rnd.nextLong())
+      }
+      i += 1
+    }
+    vs
+  }
+
+  private def binQueries(rnd: Random, w: Int, corpus: Array[Array[Long]]): Seq[Array[Long]] =
+    Seq(new Array[Long](w), Array.fill(w)(-1L), corpus(rnd.nextInt(corpus.length)).clone()) ++
+      Seq.fill(3)(Array.fill(w)(rnd.nextLong() & rnd.nextLong()))
+
+  private def naiveBinDist(metric: Metric, q: Array[Long], v: Array[Long]): Double = {
+    val inter = q.indices.map(i => java.lang.Long.bitCount(q(i) & v(i)).toLong).sum
+    val uni = q.indices.map(i => java.lang.Long.bitCount(q(i) | v(i)).toLong).sum
+    if (metric == Metric.Hamming) (uni - inter).toDouble
+    else if (uni == 0L) 0.0
+    else FastRound.round(1.0 - inter.toDouble / uni.toDouble, 4)
+  }
+
+  private def naiveBin(
+      metric: Metric, q: Array[Long], cands: Seq[(Long, Array[Long])]): Seq[(Long, Double)] =
+    cands.map { case (id, v) => (id, naiveBinDist(metric, q, v)) }
+      .sortWith { case ((i1, d1), (i2, d2)) =>
+        val c = java.lang.Double.compare(d1, d2)
+        c < 0 || (c == 0 && i1 < i2)
+      }
+
+  private val BinaryMetrics = Seq(Metric.Hamming, Metric.Jaccard)
+
+  test("flat binary knn, filtered knn, iterator and range scans equal the naive reference") {
+    val rnd = new Random(1311L)
+    (1 to 6).foreach { trial =>
+      val w = Seq(1, 2, 3)(trial % 3)
+      val n = 10 + rnd.nextInt(300)
+      val ids = Array.tabulate(n)(i => 3L * i + 7L)
+      val ws = signatures(rnd, n, w)
+      BinaryMetrics.foreach { metric =>
+        val searcher = new Serve.LocalBinarySearcher(ids, ws, metric)
+        binQueries(rnd, w, ws).foreach { q =>
+          PassRatios.foreach { ratio =>
+            val allowed = allowedBy(rnd, ratio)
+            val cands = ids.indices.filter(i => allowed(ids(i))).map(i => (ids(i), ws(i)))
+            val ranked = naiveBin(metric, q, cands)
+            Seq(1, 3, 10, n + 5).foreach { k =>
+              val got = if (ratio == 1.0) searcher.search(q, k) else searcher.search(q, k, allowed)
+              assert(bits(got) == bits(ranked.take(k)), s"trial $trial $metric k=$k pass=$ratio")
+              assert(searcher.lastCandidates == cands.size)
+            }
+            val it = searcher.iterator(q, 12, allowed)
+            assert(it.nextPage(5) == ranked.take(5) && it.nextPage(5) == ranked.slice(5, 10))
+            assert(it.nextPage(5) == ranked.slice(10, 12) && !it.hasNext)
+            val shells =
+              if (metric == Metric.Hamming) Seq((5.0, 0.0), (12.0, 3.0), (0.5, 0.0), (-1.0, 0.0))
+              else Seq((0.5, 0.0), (0.9, 0.2), (1.01, 0.0), (0.0001, 0.0))
+            shells.foreach { case (radius, rf) =>
+              val want = ranked.filter { case (_, x) => x >= rf && x < radius }
+              assert(bits(searcher.rangeSearch(q, radius, rf, allowed)) == bits(want),
+                s"trial $trial $metric range $radius/$rf pass=$ratio")
+            }
+          }
+        }
+      }
+    }
+  }
+
+  test("binary IVF knn, filtered knn and range scans equal the naive reference") {
+    val rnd = new Random(2718L)
+    (1 to 6).foreach { trial =>
+      val w = Seq(1, 2, 3)(trial % 3)
+      val n = 20 + rnd.nextInt(300)
+      val ids = Array.tabulate(n)(i => 3L * i + 7L)
+      val ws = signatures(rnd, n, w)
+      // one all-zero centroid among random ones
+      val cents = Array.tabulate(2 + rnd.nextInt(6))(c =>
+        (10L * c + 1L, if (c == 0) new Array[Long](w) else Array.fill(w)(rnd.nextLong() & rnd.nextLong())))
+      BinaryMetrics.foreach { metric =>
+        def probe(q: Array[Long]): Seq[Long] = naiveBin(metric, q, cents.toSeq).map(_._1)
+        val members = ids.indices.groupBy(i => probe(ws(i)).head)
+        val lists = new java.util.HashMap[Long, (Array[Long], Array[Array[Long]])]()
+        members.foreach { case (cid, is) => lists.put(cid, (is.map(ids).toArray, is.map(ws).toArray)) }
+        val searcher = new Serve.LocalBinaryIvfSearcher(cents, lists, metric)
+        binQueries(rnd, w, ws).foreach { q =>
+          val order = probe(q)
+          Seq(1, 2, cents.length).foreach { nprobe =>
+            PassRatios.foreach { ratio =>
+              val allowed = allowedBy(rnd, ratio)
+              val scanned = order.take(nprobe).flatMap(cid => members.getOrElse(cid, Nil))
+                .filter(i => allowed(ids(i)))
+              val ranked = naiveBin(metric, q, scanned.map(i => (ids(i), ws(i))))
+              Seq(1, 3, 10, n + 5).foreach { k =>
+                val got = if (ratio == 1.0) searcher.search(q, k, nprobe) else searcher.search(q, k, nprobe, allowed)
+                assert(bits(got) == bits(ranked.take(k)), s"trial $trial $metric k=$k nprobe=$nprobe pass=$ratio")
+                assert(searcher.lastCandidates == scanned.size)
+              }
+              val shells =
+                if (metric == Metric.Hamming) Seq((5.0, 0.0), (12.0, 3.0), (0.5, 0.0), (-1.0, 0.0))
+                else Seq((0.5, 0.0), (0.9, 0.2), (1.01, 0.0), (0.0001, 0.0))
+              shells.foreach { case (radius, rf) =>
+                val want = ranked.filter { case (_, x) => x >= rf && x < radius }
+                assert(bits(searcher.rangeSearch(q, radius, rf, nprobe, allowed)) == bits(want),
+                  s"trial $trial $metric range $radius/$rf nprobe=$nprobe pass=$ratio")
+                assert(searcher.lastCandidates == scanned.size)
+              }
             }
           }
         }
