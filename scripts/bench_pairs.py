@@ -20,8 +20,19 @@ or a failed run is not a win), and whether the claim rule holds: the change wins
 least nine tenths of the pairs run, the medians differ, in the better
 direction, by more than the base's interquartile range, every change run
 finished and was correct, and no change run failed more operations than
-its pair's base run. The base clone is deleted at exit. Nothing under
-`bench/` is changed.
+its pair's base run.
+
+Beside the claim it prints a no-regression verdict per metric that has a
+relative `bound` in BENCHMARK.json, by the no-regression rule of the
+simplicity review (one verdict per metric and workload, no combined
+score):
+
+- `unresolved`: the base's interquartile range exceeds `bound` times its
+  median, and not every change run reads better than every base run;
+- otherwise `ok` when the change median is no worse than the base median
+  by more than `bound` times the base median, and `worse` when it is.
+
+The base clone is deleted at exit. Nothing under `bench/` is changed.
 """
 import argparse
 import json
@@ -69,6 +80,17 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def verdict(base, change, bound, lower):
+    """The no-regression verdict of one metric (see the module docstring)."""
+    bq1, bmed, bq3 = quartiles(base)
+    cmed = quartiles(change)[1]
+    dominates = (max(change) < min(base)) if lower else (min(change) > max(base))
+    if bq3 - bq1 > bound * abs(bmed) and not dominates:
+        return "unresolved"
+    worse_by = (cmed - bmed) if lower else (bmed - cmed)
+    return "worse" if worse_by > bound * abs(bmed) else "ok"
+
+
 def report(workload, pairs, spec):
     """`pairs` holds every (base, change) pair run; a side is None when its run failed."""
     print(f"\n{workload}: {len(pairs)} pairs")
@@ -78,7 +100,7 @@ def report(workload, pairs, spec):
     sound = all(c is not None and c["correct"] and (b is None or c["failed"] <= b["failed"])
                 for b, c in pairs)
     width = max(len(m["name"]) for m in spec)
-    print(f"{'metric':<{width}} {'base q1/med/q3':>30} {'change q1/med/q3':>30} {'wins':>6}  claim")
+    print(f"{'metric':<{width}} {'base q1/med/q3':>30} {'change q1/med/q3':>30} {'wins':>6}  claim  verdict")
     for m in spec:
         name, lower = m["name"], m["better"] == "lower"
         base = [b[name] for b, _ in pairs if b is not None and name in b]
@@ -92,8 +114,9 @@ def report(workload, pairs, spec):
         better = cmed < bmed if lower else cmed > bmed
         holds = (sound and wins * 10 >= 9 * len(pairs) and better
                  and abs(cmed - bmed) > (bq3 - bq1))
+        verdict_ = verdict(base, change, m["bound"], lower) if "bound" in m else "-"
         print(f"{name:<{width}} {bq1:>9.4g} {bmed:>9.4g} {bq3:>9.4g}  {cq1:>9.4g} {cmed:>9.4g} {cq3:>9.4g}"
-              f" {wins:>3}/{len(pairs):<2}  {'holds' if holds else 'no'}")
+              f" {wins:>3}/{len(pairs):<2}  {'holds' if holds else 'no':<5}  {verdict_}")
     side = lambda r: "run failed" if r is None else r["failed"]
     print(f"failed ops per pair (base, change): {[(side(b), side(c)) for b, c in pairs]}")
     wrong = [i + 1 for i, (b, c) in enumerate(pairs)

@@ -304,12 +304,13 @@ private[operators] object ServeKernels {
         gate = l2Gate(heap.worstKey, unit, metric)
   }
 
-  /** Range sink: members in the [rangeFilter, radius) shell, gated by
-    * the radius. L2 family metrics only. */
+  /** Range sink of an ascending metric: members in the
+    * [rangeFilter, radius) shell, gated by the radius when `metric` is an
+    * L2 family metric. */
   final class ShellSink(radius: Double, rangeFilter: Double, metric: Metric, unit: Double)
       extends ScanSink {
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-    gate = l2Gate(radius, unit, metric)
+    if (gated(metric)) gate = l2Gate(radius, unit, metric)
     def accept(id: Long, d: Double): Unit =
       if (d >= rangeFilter && d < radius) out += ((id, d))
   }

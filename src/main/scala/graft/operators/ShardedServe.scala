@@ -217,6 +217,18 @@ object ShardedServe {
       mergeTopK(scatter(shards)(_.searchMaxScore(query, k, allowed)), k, ascending = false)
   }
 
+  /** The shard-compatibility check of the IVF routers: at least one
+    * shard, and every shard built over the same coarse quantizer —
+    * identical cluster ids and centroids (see [[ShardedIvfServing]]). */
+  private def requireSharedCentroids(engines: Seq[Serve.IvfLists[Array[Float], _]]): Unit = {
+    require(engines.nonEmpty, "router needs at least one shard")
+    val head = engines.head
+    require(engines.forall(e => java.util.Arrays.equals(e.centIds, head.centIds) &&
+        java.util.Arrays.deepEquals(e.cents.asInstanceOf[Array[AnyRef]], head.cents.asInstanceOf[Array[AnyRef]])),
+      "sharded IVF serving requires every shard built over identical centroids " +
+        "(the shared coarse quantizer) — partial-nprobe merges are exact only then")
+  }
+
   /** Scatter-gather router over loaded IVF shards.
     *
     * PRECONDITION (asserted): every shard is built over the SAME coarse
@@ -235,13 +247,7 @@ object ShardedServe {
       shards: Seq[Serve.LocalIvfSearcher],
       metric: Metric
   ) {
-    require(shards.nonEmpty, "router needs at least one shard")
-    locally {
-      val headKey = shards.head.centroidKey // hoisted — forall would recopy per shard
-      require(shards.forall(_.centroidKey == headKey),
-        "sharded IVF serving requires every shard built over identical centroids " +
-          "(the shared coarse quantizer) — partial-nprobe merges are exact only then")
-    }
+    requireSharedCentroids(shards.map(_.engine))
     def search(q: Array[Float], k: Int, nprobe: Int): Seq[(Long, Double)] =
       mergeTopK(scatter(shards)(_.search(q, k, nprobe)), k, metric.ascending)
     /** V6 across shards: per-shard ranked streams of depth n, merged and
@@ -321,12 +327,8 @@ object ShardedServe {
   final class ShardedIvfCodedServing(
       shards: Seq[Serve.LocalIvfCodedSearcher]
   ) {
-    require(shards.nonEmpty, "router needs at least one shard")
+    requireSharedCentroids(shards.map(_.engine))
     locally {
-      val headCents = shards.head.centroidKey
-      require(shards.forall(_.centroidKey == headCents),
-        "sharded coded-IVF serving requires every shard built over identical " +
-          "centroids (the shared coarse quantizer)")
       val headQuant = shards.head.quantKey
       require(shards.forall(_.quantKey == headQuant),
         "sharded coded-IVF serving requires every shard coded under the same " +

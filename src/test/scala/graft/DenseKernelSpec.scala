@@ -610,6 +610,19 @@ class DenseKernelSpec extends AnyFunSuite {
       Seq(ivf, new Serve.LocalIvfSearcher(s.cents, s.lists, Metric.L2)), Metric.L2)
     val graphRouter = new ShardedServe.ShardedGraphServing(Seq(walk, g.searcher(Metric.L2)), Metric.L2)
     val codedRouter = new ShardedServe.ShardedIvfCodedServing(Seq(coded))
+    // the binary arms and their router keep the same reject contract
+    val bids = Array.tabulate(30)(i => 2L * i + 1L)
+    val bws = signatures(rnd, 30, 2)
+    val bin = new Serve.LocalBinarySearcher(bids, bws, Metric.Hamming)
+    val binLists = new java.util.HashMap[Long, (Array[Long], Array[Array[Long]])]()
+    binLists.put(1L, (bids.take(15), bws.take(15)))
+    binLists.put(2L, (bids.drop(15), bws.drop(15)))
+    val binCents = Array((1L, bws(0)), (2L, bws(20)))
+    val binIvf = new Serve.LocalBinaryIvfSearcher(binCents, binLists, Metric.Jaccard)
+    val binRouter = new ShardedServe.ShardedBinaryServing(
+      Seq(bin, new Serve.LocalBinarySearcher(bids.map(_ + 100L), bws, Metric.Hamming)))
+    val emptyBin = new Serve.LocalBinarySearcher(Array.emptyLongArray, Array.empty[Array[Long]], Metric.Hamming)
+    val bq = bws(3)
     val q = Array(0.25f, 0f, 0f, 0f)
     val all = (_: Long) => true
     def rejects(msg: String)(call: => Any): Unit = {
@@ -618,6 +631,10 @@ class DenseKernelSpec extends AnyFunSuite {
     }
     Seq(0, -3).foreach { k =>
       val m = s"got $k"
+      rejects(m)(bin.search(bq, k)); rejects(m)(bin.search(bq, k, all)); rejects(m)(bin.iterator(bq, k))
+      rejects(m)(binIvf.search(bq, k, 1)); rejects(m)(binIvf.search(bq, k, 2, all))
+      rejects(m)(binRouter.search(bq, k)); rejects(m)(binRouter.search(bq, k, all))
+      rejects(m)(binRouter.iterator(bq, k)); rejects(m)(binRouter.iterator(bq, k, all))
       rejects(m)(walk.search(q, k, 10)); rejects(m)(walk.search(q, k, 10, all))
       rejects(m)(walk.bruteSearch(q, k)); rejects(m)(walk.rangeSearch(q, 1.0, 0.0, k))
       rejects(m)(ivf.search(q, k, 2)); rejects(m)(ivf.search(q, k, 2, all))
@@ -636,5 +653,23 @@ class DenseKernelSpec extends AnyFunSuite {
       rejects(m)(router.search(bad, 5, 2)); rejects(m)(router.rangeSearch(bad, 1.0, 0.0, Seq(s.radii, s.radii)))
       rejects(m)(graphRouter.search(bad, 5, 10)); rejects(m)(codedRouter.search(bad, 5, 2, 10))
     }
+    // a signature's word count is checked once per query, against the
+    // shard's, also when no candidate is scanned
+    Seq(Array(1L), Array(1L, 2L, 3L)).foreach { bad =>
+      val m = s"query ${bad.length} words vs shard 2"
+      rejects(m)(bin.search(bad, 5)); rejects(m)(bin.search(bad, 5, (_: Long) => false))
+      rejects(m)(bin.iterator(bad, 5)); rejects(m)(bin.rangeSearch(bad, 9.0, 0.0))
+      rejects(m)(binIvf.search(bad, 5, 2)); rejects(m)(binIvf.rangeSearch(bad, 0.5, 0.0, 2))
+      rejects(m)(binRouter.search(bad, 5)); rejects(m)(binRouter.rangeSearch(bad, 9.0, 0.0))
+    }
+    rejects("query 1 words vs shard 0")(emptyBin.search(Array(1L), 5))
+    // a shard of mixed word counts is rejected when it is built
+    val mixed = "binary shard signatures of mixed word count: 3 and 2"
+    rejects(mixed)(new Serve.LocalBinarySearcher(Array(1L, 2L), Array(Array(1L, 2L), Array(1L, 2L, 3L)), Metric.Hamming))
+    rejects(mixed)(new Serve.LocalBinaryIvfSearcher(Array((1L, Array(0L, 0L))), {
+      val l = new java.util.HashMap[Long, (Array[Long], Array[Array[Long]])]()
+      l.put(1L, (Array(1L), Array(Array(1L, 2L, 3L))))
+      l
+    }, Metric.Hamming))
   }
 }
